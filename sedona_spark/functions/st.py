@@ -82,12 +82,23 @@ def st_envelope_cols(ring: Column) -> list[Column]:
 # ---------------------------------------------------------------------------
 
 
+def _pip_or_null(kernel, geom: pd.Series, px: pd.Series, py: pd.Series) -> pd.Series:
+    """Ternary PIP ``kernel`` per row; a NULL geometry classifies NULL
+    (SQL three-valued logic), so every predicate derived from it is NULL."""
+    null = geom.isna().to_numpy()
+    if not null.any():
+        return pd.Series(kernel(geom.to_numpy(), px.to_numpy(), py.to_numpy()))
+    out = pd.Series(pd.NA, index=geom.index, dtype="Int8")
+    keep = ~null
+    out[keep] = kernel(
+        geom.to_numpy()[keep], px.to_numpy()[keep], py.to_numpy()[keep]
+    )
+    return out
+
+
 @F.pandas_udf(ByteType())
 def _pip_class_udf(ring: pd.Series, px: pd.Series, py: pd.Series) -> pd.Series:
-    res = kernels.point_in_polygon_batch(
-        ring.to_numpy(), px.to_numpy(), py.to_numpy()
-    )
-    return pd.Series(res)
+    return _pip_or_null(kernels.point_in_polygon_batch, ring, px, py)
 
 
 def pip_class(ring: Column, px: Column, py: Column) -> Column:
@@ -121,10 +132,7 @@ def st_intersects_polygons(ring_a: Column, ring_b: Column) -> Column:
 
 @F.pandas_udf(ByteType())
 def _pip_rings_udf(geom: pd.Series, px: pd.Series, py: pd.Series) -> pd.Series:
-    res = kernels.point_in_rings_batch(
-        geom.to_numpy(), px.to_numpy(), py.to_numpy()
-    )
-    return pd.Series(res)
+    return _pip_or_null(kernels.point_in_rings_batch, geom, px, py)
 
 
 def pip_class_multi(geom: Column, px: Column, py: Column) -> Column:

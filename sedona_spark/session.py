@@ -5,6 +5,15 @@ Mirrors the role of the reference's ``SedonaContext.create(spark)``
 — but because this engine is plain DataFrame pipelines over int64 cell
 equi-joins, there is nothing to inject into Catalyst: no strategy, no
 optimizer rule, no UDT registration. "Setup" is just sensible confs.
+
+One of them reaches past the SQL layer: ``spark.python.daemon.module`` is
+set to :mod:`sedona_spark.pydaemon`, the stock PySpark daemon without the
+per-task re-read of Spark's zipped pyspark that ``importlib.invalidate_caches()``
+does on Python 3.11/3.12 (0.16-0.28 CPU-s per Python task, most of a
+small pandas UDF task's cost). The workers then import ``sedona_spark``
+before the first fork, which every engine UDF needs anyway. A value in
+``extra_conf`` wins. Sessions built without :func:`get_spark` (such as
+``tools/submit_job.py`` under ``spark-submit``) keep the stock daemon.
 """
 
 from __future__ import annotations
@@ -17,6 +26,9 @@ from pyspark.sql import SparkSession
 CONF_CELL_LEVEL = "spark.sedona_spark.cell.level"  # default join index level
 CONF_JOIN_SALT = "spark.sedona_spark.join.salt"  # salt buckets for hot cells
 CONF_KNN_TIES = "spark.sedona_spark.knn.includeTies"
+
+# Python worker daemon: pyspark.daemon minus the per-task zip re-read
+DAEMON_MODULE = "sedona_spark.pydaemon"
 
 
 def get_spark(
@@ -55,6 +67,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
         .config("spark.driver.bindAddress", "127.0.0.1")
+        .config("spark.python.daemon.module", DAEMON_MODULE)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
