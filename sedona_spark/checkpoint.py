@@ -19,6 +19,21 @@ partial replay sound (contrast the reference's sampled KDB trees,
 Metrics mirror the reference's join accumulators
 (``JoinQuery.java:683-686``, ``core/monitoring/Metrics.java``) but are made
 durable in the manifest.
+
+A commit runs no Spark job that only re-derives what the committer already
+knows:
+
+* **Footer-verified commit.** Per-bucket rows come from the written parquet
+  footers (the same numbers a Spark ``count()`` over parquet reads) and
+  bytes from the file sizes; the commit refuses, before the marker, when the
+  non-empty buckets' rows differ from the pre-manifest counted before the
+  write. :func:`checkpoint_stage` and :func:`resume_stage` share this path,
+  so both write the same manifest fields.
+* **Schema in the manifest.** The manifest records the stage schema as
+  parquet read-back infers it (data columns nullable, ``part_bucket int``);
+  :func:`read_stage` reads with it, so read-back infers nothing and an empty
+  stage reads as an empty DataFrame. Manifests without a schema (written
+  before it was recorded) fall back to inference.
 """
 
 from __future__ import annotations
@@ -30,6 +45,14 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    IntegerType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 _MARKER = "_SUCCESS.sedona_spark"
 _MANIFEST = "_manifest.json"
@@ -54,9 +77,102 @@ def _bucket_rows_durable(data_dir: str, entry: str) -> int:
     return total
 
 
+def _bucket_metrics(data_dir: str) -> dict[int, dict]:
+    """Per-bucket ``{"rows", "bytes"}`` of the data under ``data_dir``, from
+    parquet footers and file sizes — no Spark job. ``rows`` is -1 for a
+    bucket holding a torn file (see :func:`_bucket_rows_durable`)."""
+    parts: dict[int, dict] = {}
+    if not os.path.isdir(data_dir):
+        return parts
+    for entry in os.listdir(data_dir):
+        if entry.startswith("part_bucket="):
+            p = os.path.join(data_dir, entry)
+            parts[int(entry.split("=", 1)[1])] = {
+                "rows": _bucket_rows_durable(data_dir, entry),
+                "bytes": sum(
+                    os.path.getsize(os.path.join(p, f))
+                    for f in os.listdir(p)
+                    if f.endswith(".parquet")
+                ),
+            }
+    return parts
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable (Scala's
+    ``DataType.asNullable``), as parquet read-back returns it."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _stage_schema(df: DataFrame) -> dict:
+    """JSON of the schema that inference returns for ``df`` checkpointed:
+    its columns nullable, then the ``part_bucket`` directory key as int."""
+    return StructType(
+        _nullable(df.schema).fields
+        + [StructField("part_bucket", IntegerType(), True)]
+    ).jsonValue()
+
+
 def _stage_paths(root: str, stage: str) -> tuple[str, str, str]:
     base = os.path.join(root, stage)
     return base, os.path.join(base, "data"), os.path.join(base, _MANIFEST)
+
+
+def _read_premanifest(base: str) -> dict[int, int] | None:
+    """Expected rows per bucket, counted before the data write; ``None``
+    for a stage that has no pre-manifest (legacy layout)."""
+    pre_path = os.path.join(base, _PREMANIFEST)
+    if not os.path.exists(pre_path):
+        return None
+    with open(pre_path) as f:
+        return {int(k): int(v) for k, v in json.load(f).items()}
+
+
+def _with_bucket(df: DataFrame, bucket_col: str, n_buckets: int) -> DataFrame:
+    return df.withColumn(
+        "part_bucket", F.pmod(F.col(bucket_col).cast("long"), F.lit(n_buckets))
+    )
+
+
+def _commit(
+    base: str, data_dir: str, man_path: str, head: dict,
+    expected: dict[int, int] | None, t0: float,
+) -> dict:
+    """Verify the written buckets against ``expected`` (the pre-manifest;
+    ``None`` for a legacy stage without one), then write the manifest
+    (``head`` + wall time + footer metrics) and the commit marker."""
+    parts = _bucket_metrics(data_dir)
+    if expected is not None:
+        got = {b: m["rows"] for b, m in parts.items() if m["rows"]}
+        want = {b: n for b, n in expected.items() if n}
+        if got != want:
+            bad = sorted(b for b in set(got) | set(want)
+                         if got.get(b) != want.get(b))
+            raise RuntimeError(
+                f"stage {head['stage']!r}: written rows differ from the "
+                f"pre-manifest in buckets {bad} "
+                f"(written {[got.get(b, 0) for b in bad]}, "
+                f"expected {[want.get(b, 0) for b in bad]}); not committed"
+            )
+    manifest = {
+        **head,
+        "wall_sec": time.time() - t0,
+        "partitions": {str(b): parts[b] for b in sorted(parts)},
+    }
+    with open(man_path, "w") as f:
+        json.dump(manifest, f, indent=1)
+    with open(os.path.join(base, _MARKER), "w") as f:
+        f.write(str(time.time()))
+    return manifest
 
 
 def checkpoint_stage(
@@ -82,9 +198,7 @@ def checkpoint_stage(
         shutil.rmtree(base)
 
     t0 = time.time()
-    out = df.withColumn(
-        "part_bucket", F.pmod(F.col(bucket_col).cast("long"), F.lit(n_buckets))
-    )
+    out = _with_bucket(df, bucket_col, n_buckets)
     # pre-manifest BEFORE the data write: expected rows per bucket make
     # bucket durability *verifiable* — a bucket dir left by a crashed commit
     # (v2 committer, object-store direct write) is only trusted on resume if
@@ -100,38 +214,9 @@ def checkpoint_stage(
         json.dump({str(b): n for b, n in sorted(expected.items())}, f)
     out.write.mode("overwrite").partitionBy("part_bucket").parquet(data_dir)
     out.unpersist()
-
-    spark = df.sparkSession
-    written = spark.read.parquet(data_dir)
-    counts = {
-        int(r["part_bucket"]): int(r["n"])
-        for r in written.groupBy("part_bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    sizes: dict[int, int] = {}
-    for entry in os.listdir(data_dir):
-        if entry.startswith("part_bucket="):
-            b = int(entry.split("=", 1)[1])
-            p = os.path.join(data_dir, entry)
-            sizes[b] = sum(
-                os.path.getsize(os.path.join(p, f))
-                for f in os.listdir(p)
-                if f.endswith(".parquet")
-            )
-    manifest = {
-        "stage": stage,
-        "bucket_col": bucket_col,
-        "n_buckets": n_buckets,
-        "wall_sec": time.time() - t0,
-        "partitions": {
-            str(b): {"rows": counts.get(b, 0), "bytes": sizes.get(b, 0)}
-            for b in sorted(set(counts) | set(sizes))
-        },
-    }
-    with open(man_path, "w") as f:
-        json.dump(manifest, f, indent=1)
-    with open(os.path.join(base, _MARKER), "w") as f:
-        f.write(str(time.time()))
-    return manifest
+    head = {"stage": stage, "bucket_col": bucket_col, "n_buckets": n_buckets,
+            "schema": _stage_schema(df)}
+    return _commit(base, data_dir, man_path, head, expected, t0)
 
 
 def is_committed(root: str, stage: str) -> bool:
@@ -139,8 +224,16 @@ def is_committed(root: str, stage: str) -> bool:
 
 
 def read_stage(spark: SparkSession, root: str, stage: str) -> DataFrame:
-    _, data_dir, _ = _stage_paths(root, stage)
-    return spark.read.parquet(data_dir)
+    """The stage's rows, read with the manifest's schema (inferred from the
+    files only for a manifest that predates the recorded schema)."""
+    _, data_dir, man_path = _stage_paths(root, stage)
+    schema = None
+    if os.path.exists(man_path):
+        with open(man_path) as f:
+            schema = json.load(f).get("schema")
+    if schema is None:
+        return spark.read.parquet(data_dir)
+    return spark.read.schema(StructType.fromJson(schema)).parquet(data_dir)
 
 
 def incomplete_buckets(root: str, stage: str, n_buckets: int) -> list[int]:
@@ -157,19 +250,8 @@ def incomplete_buckets(root: str, stage: str, n_buckets: int) -> list[int]:
     base, data_dir, man_path = _stage_paths(root, stage)
     if os.path.exists(os.path.join(base, _MARKER)):
         return []
-    pre_path = os.path.join(base, _PREMANIFEST)
-    expected: dict[int, int] | None = None
-    if os.path.exists(pre_path):
-        with open(pre_path) as f:
-            expected = {int(k): int(v) for k, v in json.load(f).items()}
-
-    actual: dict[int, int] = {}
-    if os.path.exists(data_dir):
-        for entry in os.listdir(data_dir):
-            if entry.startswith("part_bucket="):
-                b = int(entry.split("=", 1)[1])
-                actual[b] = _bucket_rows_durable(data_dir, entry)
-
+    expected = _read_premanifest(base)
+    actual = {b: m["rows"] for b, m in _bucket_metrics(data_dir).items()}
     if expected is None:
         present = {b for b, n in actual.items() if n > 0}
         return [b for b in range(n_buckets) if b not in present]
@@ -207,30 +289,15 @@ def resume_stage(
         p = os.path.join(data_dir, f"part_bucket={b}")
         if os.path.exists(p):
             shutil.rmtree(p)
-    todo = df.withColumn(
-        "part_bucket", F.pmod(F.col(bucket_col).cast("long"), F.lit(n_buckets))
-    ).filter(F.col("part_bucket").isin([int(b) for b in missing]))
-    todo.write.mode("append").partitionBy("part_bucket").parquet(data_dir)
+    if missing:
+        todo = _with_bucket(df, bucket_col, n_buckets).filter(
+            F.col("part_bucket").isin([int(b) for b in missing]))
+        todo.write.mode("append").partitionBy("part_bucket").parquet(data_dir)
 
-    spark = df.sparkSession
-    written = spark.read.parquet(data_dir)
-    counts = {
-        int(r["part_bucket"]): int(r["n"])
-        for r in written.groupBy("part_bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    manifest = {
-        "stage": stage,
-        "bucket_col": bucket_col,
-        "n_buckets": n_buckets,
-        "wall_sec": time.time() - t0,
-        "resumed_buckets": [int(b) for b in missing],
-        "partitions": {str(b): {"rows": counts.get(b, 0)} for b in sorted(counts)},
-    }
-    with open(man_path, "w") as f:
-        json.dump(manifest, f, indent=1)
-    with open(os.path.join(base, _MARKER), "w") as f:
-        f.write(str(time.time()))
-    return manifest
+    head = {"stage": stage, "bucket_col": bucket_col, "n_buckets": n_buckets,
+            "schema": _stage_schema(df),
+            "resumed_buckets": [int(b) for b in missing]}
+    return _commit(base, data_dir, man_path, head, _read_premanifest(base), t0)
 
 
 def list_stages(root: str) -> list[dict]:
@@ -244,7 +311,7 @@ def list_stages(root: str) -> list[dict]:
         base, _, manifest = _stage_paths(root, name)
         if not os.path.isdir(base):
             continue
-        rec = {"stage": name, "committed": os.path.exists(manifest),
+        rec = {"stage": name, "committed": is_committed(root, name),
                "rows": None, "bytes": None, "committed_at": None}
         if rec["committed"]:
             try:

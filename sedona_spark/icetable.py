@@ -40,8 +40,9 @@ Design points that carry to 100 TB:
   :func:`expire_snapshots`.
 * **File stats are collected distributed.** Per-file rows/bytes/min-max
   come from parquet *footers* read by an Arrow-batched executor pass
-  (:func:`_collect_file_stats`) — the driver never touches data bytes,
-  so stats cost O(files), not O(bytes).
+  (:func:`_collect_file_stats`): the path list is sliced straight into
+  tasks, so a commit's stats are one Spark job with no shuffle. The driver
+  never touches data bytes, so stats cost O(files), not O(bytes).
 * **Scan pruning is file-list-time.** :func:`scan` drops every file whose
   partition value or column min/max refutes the predicate before Spark
   ever sees the path — the same job-planning-time pruning Iceberg does,
@@ -217,8 +218,11 @@ def _collect_file_stats(spark: SparkSession, files: list[str],
             yield pd.DataFrame(
                 recs, columns=["path", "rows", "bytes", "mins", "maxs"])
 
-    fdf = spark.createDataFrame([(p,) for p in files], "path string")
-    out = fdf.repartition(min(len(files), 32)).mapInPandas(
+    # parallelize splits the path list without a shuffle: one job, one
+    # task per slice
+    paths = spark.sparkContext.parallelize(
+        [(p,) for p in files], min(len(files), 32))
+    out = spark.createDataFrame(paths, "path string").mapInPandas(
         footer, "path string, rows long, bytes long, mins string, maxs string"
     ).collect()
     stats = []

@@ -442,3 +442,103 @@ def test_sessionize_stream_gap_semantics(spark, tmp_path):
         assert sids == sorted(set(sids))  # strictly increasing per user
     finally:
         q.stop()
+
+
+def test_empty_stage_commits(spark, root):
+    """An empty stage commits with no buckets and reads back empty, with its
+    columns (read-back used to fail to infer a schema from no files)."""
+    m = ckpt.checkpoint_stage(spark.range(0), root, "empty", "id", n_buckets=4)
+    assert m["partitions"] == {}
+    assert ckpt.is_committed(root, "empty")
+    back = ckpt.read_stage(spark, root, "empty")
+    assert back.count() == 0
+    assert back.columns == ["id", "part_bucket"]
+
+
+def test_short_write_is_not_committed(spark, root, monkeypatch):
+    """Footer rows that differ from the pre-manifest stop the commit before
+    the marker; once the footers agree again, resume commits without
+    rewriting anything."""
+    real = ckpt._bucket_metrics
+
+    def one_row_short(data_dir):
+        parts = real(data_dir)
+        b = min(b for b, m in parts.items() if m["rows"] > 0)
+        parts[b]["rows"] -= 1
+        return parts
+
+    df = _df(spark, 200)
+    monkeypatch.setattr(ckpt, "_bucket_metrics", one_row_short)
+    with pytest.raises(RuntimeError, match="written rows differ"):
+        ckpt.checkpoint_stage(df, root, "short", "cell", n_buckets=8)
+    assert not ckpt.is_committed(root, "short")
+    assert not os.path.exists(os.path.join(root, "short", ckpt._MANIFEST))
+
+    monkeypatch.setattr(ckpt, "_bucket_metrics", real)
+    assert ckpt.incomplete_buckets(root, "short", 8) == []
+    m = ckpt.resume_stage(df, root, "short", "cell", n_buckets=8)
+    assert m["resumed_buckets"] == []
+    assert sum(p["rows"] for p in m["partitions"].values()) == 200
+
+
+def test_resumed_manifest_matches_fresh(spark, root):
+    """Both commit paths write the same manifest fields: a resumed stage
+    reports bytes and a commit time like a fresh one."""
+    df = _df(spark)
+    fresh = ckpt.checkpoint_stage(df, root, "r", "cell", n_buckets=8)
+    base = os.path.join(root, "r")
+    os.remove(os.path.join(base, ckpt._MARKER))
+    shutil.rmtree(os.path.join(base, "data", "part_bucket=3"))
+    resumed = ckpt.resume_stage(df, root, "r", "cell", n_buckets=8)
+
+    assert resumed["resumed_buckets"] == [3]
+    assert set(resumed) - {"resumed_buckets"} == set(fresh)
+    assert resumed["schema"] == fresh["schema"]
+    assert ({b: p["rows"] for b, p in resumed["partitions"].items()}
+            == {b: p["rows"] for b, p in fresh["partitions"].items()})
+    assert all(set(p) == {"rows", "bytes"} and p["bytes"] > 0
+               for p in resumed["partitions"].values())
+    (rec,) = ckpt.list_stages(root)
+    assert rec["committed"] and rec["rows"] == 1000
+    assert rec["bytes"] == sum(p["bytes"] for p in resumed["partitions"].values())
+    assert rec["committed_at"] is not None
+
+
+def test_list_stages_committed_means_marker(spark, root):
+    """The manifest is written before the marker, so a manifest alone (crash
+    between the two) is not a committed stage."""
+    ckpt.checkpoint_stage(_df(spark, 100), root, "m", "cell", n_buckets=4)
+    os.remove(os.path.join(root, "m", ckpt._MARKER))
+    (rec,) = ckpt.list_stages(root)
+    assert not rec["committed"] and rec["rows"] is None
+
+
+def test_read_stage_schema_matches_inference(spark, root):
+    """The manifest's schema is exactly what parquet inference returns,
+    nested and non-null types included; a manifest written without a schema
+    still reads (by inference)."""
+    i = F.col("id")
+    df = spark.range(50).select(
+        i,
+        F.array(i.cast("double"), F.lit(0.5)).alias("arr"),
+        F.array(F.array(i.cast("double")), F.array(F.lit(1.0))).alias("nested"),
+        F.struct(i.alias("a"), F.lit("s").alias("b")).alias("st"),
+        F.create_map(F.lit("k"), i).alias("mp"),
+        i.cast("string").cast("binary").alias("bin"),
+    )
+    ckpt.checkpoint_stage(df, root, "typed", "id", n_buckets=4)
+    data_dir = os.path.join(root, "typed", "data")
+    back = ckpt.read_stage(spark, root, "typed")
+    assert back.schema == spark.read.parquet(data_dir).schema
+    want = sorted(df.collect())
+    assert sorted(r[:-1] for r in back.collect()) == want
+
+    man_path = os.path.join(root, "typed", ckpt._MANIFEST)
+    with open(man_path) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(man_path, "w") as f:
+        json.dump(m, f)
+    legacy = ckpt.read_stage(spark, root, "typed")
+    assert legacy.schema == back.schema
+    assert sorted(r[:-1] for r in legacy.collect()) == want

@@ -326,3 +326,39 @@ def test_metadata_tables(spark, table):
     assert [r["snapshot_id"] for r in hist] == [1, 2]
     with pytest.raises(ValueError):
         it.metadata_table(spark, table, "manifests")
+
+
+def test_file_stats_one_job_and_exact(spark, tmp_path, count_jobs):
+    """File stats take one Spark job, and every manifest entry matches the
+    file's own data: row count, size on disk, column min/max."""
+    path = str(tmp_path / "tbl")
+    df = (_batch(spark, 0, 300)
+          .withColumn("name", F.concat(F.lit("n"), (F.col("id") % 37).cast("string")))
+          .withColumn("x", F.col("id") / F.lit(3.0))
+          .repartition(40))
+    it.commit_append(df, path)
+    files = it.plan_files(path)
+    assert len(files) == 40
+
+    paths = [os.path.join(path, f["path"]) for f in files]
+    cols = ["id", "cell", "v", "name", "x"]
+    stats, jobs = count_jobs(lambda: it._collect_file_stats(spark, paths, cols))
+    assert jobs == 1
+    assert [s["path"] for s in sorted(stats, key=lambda s: s["path"])] == sorted(paths)
+
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    for c in cols:
+        aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
+    truth = {
+        r["f"]: r for r in spark.read.parquet(*paths)
+        .withColumn("f", F.input_file_name()).groupBy("f").agg(*aggs).collect()
+    }
+    truth = {os.path.realpath(f.replace("file://", "")): r for f, r in truth.items()}
+    for f in files:
+        p = os.path.join(path, f["path"])
+        t = truth[os.path.realpath(p)]
+        assert f["rows"] == t["rows"]
+        assert f["bytes"] == os.path.getsize(p)
+        for c in cols:
+            assert f["stats"]["min"][c] == t[f"min_{c}"]
+            assert f["stats"]["max"][c] == t[f"max_{c}"]

@@ -159,3 +159,22 @@ def test_pipeline_publish_to_icetable(spark, tmp_path):
     p = publish_stage_to_icetable(spark, root2, "zonal", tbl)
     assert p["already_published"] is False
     assert len(icetable.snapshots(tbl)) == 2
+
+
+def test_pipeline_job_budget(spark, tmp_path, count_jobs):
+    """Spark jobs one published pipeline run takes on the fixture above.
+    Stage commits read parquet footers and read-back uses the manifest's
+    schema, so neither runs a job. The count was 31 while every commit
+    re-read its stage (schema inference plus a grouped count), read-back
+    inferred the schema, and table file stats took a shuffle."""
+    img_path = str(tmp_path / "imgs")
+    synthesize_images(spark, 40, partitions=4).write.parquet(img_path)
+    zones = spark.createDataFrame(
+        [(0, 0.0, 0.0, 100.0, 100.0), (1, 20.0, 20.0, 60.0, 60.0)],
+        "zone_id int, xmin double, ymin double, xmax double, ymax double",
+    )
+    m, jobs = count_jobs(lambda: run_image_pipeline(
+        spark, img_path, zones, str(tmp_path / "snap"), tile=16, level=6,
+        n_buckets=8, publish_table=str(tmp_path / "tbl")))
+    assert m["publish"]["already_published"] is False
+    assert jobs == 18
