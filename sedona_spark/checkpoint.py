@@ -138,8 +138,16 @@ def _read_premanifest(base: str) -> dict[int, int] | None:
 
 
 def _with_bucket(df: DataFrame, bucket_col: str, n_buckets: int) -> DataFrame:
+    """``df`` plus its lineage bucket ``pmod(bucket_col, n_buckets)``. A NULL
+    key goes to bucket 0, so the write, the pre-manifest and every footer
+    read see an int bucket (Spark would otherwise write a
+    ``__HIVE_DEFAULT_PARTITION__`` dir), and a replay of bucket 0 still
+    selects the same rows."""
     return df.withColumn(
-        "part_bucket", F.pmod(F.col(bucket_col).cast("long"), F.lit(n_buckets))
+        "part_bucket",
+        F.coalesce(
+            F.pmod(F.col(bucket_col).cast("long"), F.lit(n_buckets)), F.lit(0)
+        ),
     )
 
 
@@ -186,6 +194,7 @@ def checkpoint_stage(
     """Write ``df`` as a committed snapshot partitioned by a deterministic
     lineage bucket (``pmod(hash-free bucket of bucket_col, n_buckets)`` —
     plain modulus so the mapping is engine-independent and replayable).
+    Rows whose ``bucket_col`` is NULL go to bucket 0.
 
     Returns the manifest: per-bucket row counts + bytes + wall time.
     Idempotent: an existing committed stage is returned as-is.

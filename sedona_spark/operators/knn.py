@@ -459,117 +459,121 @@ def knn_join(
         (F.col("_cnt") >= k) & (F.col("_kth") <= bound)
     ) | full_cover
 
-    for _ in range(max_rounds):
-        disk = _disk_join(unresolved, objects_c, level, qx, qy, obj_x, obj_y, metric)
-        if exclude_pair is not None:
-            disk = disk.filter(F.col(exclude_pair[0]) != F.col(exclude_pair[1]))
-        # rank window + count/max windows share the same partitioning →
-        # one shuffle; the lazy localCheckpoint materializes inside the
-        # count job below — ONE pass over the data per round (round 1 of
-        # the old shape ran 3 jobs: results checkpoint, nxt checkpoint,
-        # count)
-        cand = (
-            disk
-            .withColumn("knn_rank", rank_fn.over(w))
-            .filter(F.col("knn_rank") <= k)
-            .withColumn("_cnt", F.count(F.lit(1)).over(wq))
-            .withColumn("_kth", F.max(dcol).over(wq))
-            .withColumn("_done", done_expr)
-            .localCheckpoint(eager=False)
-        )
-        results.append(
-            cand.filter(F.col("_done")).drop("_cnt", "_kth", "_done")
-        )
+    try:
+        for _ in range(max_rounds):
+            disk = _disk_join(unresolved, objects_c, level, qx, qy, obj_x, obj_y, metric)
+            if exclude_pair is not None:
+                disk = disk.filter(F.col(exclude_pair[0]) != F.col(exclude_pair[1]))
+            # rank window + count/max windows share the same partitioning →
+            # one shuffle; the lazy localCheckpoint materializes inside the
+            # count job below — ONE pass over the data per round (round 1 of
+            # the old shape ran 3 jobs: results checkpoint, nxt checkpoint,
+            # count)
+            cand = (
+                disk
+                .withColumn("knn_rank", rank_fn.over(w))
+                .filter(F.col("knn_rank") <= k)
+                .withColumn("_cnt", F.count(F.lit(1)).over(wq))
+                .withColumn("_kth", F.max(dcol).over(wq))
+                .withColumn("_done", done_expr)
+                .localCheckpoint(eager=False)
+            )
+            results.append(
+                cand.filter(F.col("_done")).drop("_cnt", "_kth", "_done")
+            )
 
-        # adaptive growth: with ≥k candidates the kth distance is an upper
-        # bound on the true kth ⇒ size the ring so bound(ring) ≥ kth; with
-        # <k candidates grow 4× blind
-        extra_aggs = (
-            [F.first("_ring_y").alias("_ry")] if geodesic else []
-        )
-        notdone = cand.filter(~F.col("_done")).groupBy(query_id).agg(
-            *[F.first(c).alias(c) for c in qcols if c != query_id],
-            F.first("_cnt").alias("_cnt"),
-            F.first("_kth").alias("_kth"),
-            F.first("_ring").alias("_r"),
-            *extra_aggs,
-        )
-        if geodesic:
-            kth = F.col("_kth")
-            ring_y = kth / F.lit(r_bound * ch * _RAD)
-            phi_max_g = F.least(
-                F.lit(90.0), F.abs(F.col(qy)) + (F.col("_r") + 1) * F.lit(ch)
+            # adaptive growth: with ≥k candidates the kth distance is an upper
+            # bound on the true kth ⇒ size the ring so bound(ring) ≥ kth; with
+            # <k candidates grow 4× blind
+            extra_aggs = (
+                [F.first("_ring_y").alias("_ry")] if geodesic else []
             )
-            cmin_g = F.greatest(F.cos(phi_max_g * F.lit(_RAD)), F.lit(1e-12))
-            ang_needed = (
-                F.lit(2.0 / _RAD)
-                * F.asin(F.least(F.lit(1.0), kth / (F.lit(2.0) * F.lit(r_bound) * cmin_g)))
+            notdone = cand.filter(~F.col("_done")).groupBy(query_id).agg(
+                *[F.first(c).alias(c) for c in qcols if c != query_id],
+                F.first("_cnt").alias("_cnt"),
+                F.first("_kth").alias("_kth"),
+                F.first("_ring").alias("_r"),
+                *extra_aggs,
             )
-            ring_x = ang_needed / F.lit(cw)
-            # each axis grows by its OWN requirement: certification needs
-            # min(y_bound(_ring_y), x_bound(_ring)) >= kth, i.e. both
-            grown = F.least(
-                F.lit(float(n_side)),
-                F.greatest(F.ceil(ring_x) + 1,
-                           F.col("_r").cast("double") * 2),
-            )
-            grown_y = F.least(
-                F.lit(float(n_side)),
-                F.greatest(F.ceil(ring_y) + 1,
-                           F.col("_ry").cast("double") * 2),
-            )
-            # near-pole: the x-bound is capped at 2R·cos(φ_max); if even
-            # that ceiling cannot certify kth, jump straight to the
-            # half-ring (full wrapped longitude coverage — beyond it only
-            # the latitude bound matters) instead of doubling through
-            # useless intermediate rounds
-            hopeless_x = F.lit(2.0) * F.lit(r_bound) * cmin_g < kth
-            grown = F.when(
-                hopeless_x, F.greatest(grown, F.lit(float(n_side // 2)))
-            ).otherwise(grown)
-        else:
-            grown = F.ceil(F.sqrt(F.col("_kth")) / F.lit(min_dim)) + 1
-        remaining = notdone.withColumn(
-            "_ring",
-            F.when(F.col("_cnt") >= k, grown)
-            .otherwise(F.col("_r") * 4)
-            .cast("int"),
-        )
-        if geodesic:
-            remaining = remaining.withColumn(
-                "_ring_y",
-                F.when(F.col("_cnt") >= k, grown_y)
-                .otherwise(F.col("_ry") * 4)
+            if geodesic:
+                kth = F.col("_kth")
+                ring_y = kth / F.lit(r_bound * ch * _RAD)
+                phi_max_g = F.least(
+                    F.lit(90.0), F.abs(F.col(qy)) + (F.col("_r") + 1) * F.lit(ch)
+                )
+                cmin_g = F.greatest(F.cos(phi_max_g * F.lit(_RAD)), F.lit(1e-12))
+                ang_needed = (
+                    F.lit(2.0 / _RAD)
+                    * F.asin(F.least(F.lit(1.0), kth / (F.lit(2.0) * F.lit(r_bound) * cmin_g)))
+                )
+                ring_x = ang_needed / F.lit(cw)
+                # each axis grows by its OWN requirement: certification needs
+                # min(y_bound(_ring_y), x_bound(_ring)) >= kth, i.e. both
+                grown = F.least(
+                    F.lit(float(n_side)),
+                    F.greatest(F.ceil(ring_x) + 1,
+                               F.col("_r").cast("double") * 2),
+                )
+                grown_y = F.least(
+                    F.lit(float(n_side)),
+                    F.greatest(F.ceil(ring_y) + 1,
+                               F.col("_ry").cast("double") * 2),
+                )
+                # near-pole: the x-bound is capped at 2R·cos(φ_max); if even
+                # that ceiling cannot certify kth, jump straight to the
+                # half-ring (full wrapped longitude coverage — beyond it only
+                # the latitude bound matters) instead of doubling through
+                # useless intermediate rounds
+                hopeless_x = F.lit(2.0) * F.lit(r_bound) * cmin_g < kth
+                grown = F.when(
+                    hopeless_x, F.greatest(grown, F.lit(float(n_side // 2)))
+                ).otherwise(grown)
+            else:
+                grown = F.ceil(F.sqrt(F.col("_kth")) / F.lit(min_dim)) + 1
+            remaining = notdone.withColumn(
+                "_ring",
+                F.when(F.col("_cnt") >= k, grown)
+                .otherwise(F.col("_r") * 4)
                 .cast("int"),
-            ).drop("_ry")
-        remaining = remaining.drop("_cnt", "_kth", "_r")
-        # queries with ZERO candidates produce no cand row: widen them too
-        # (unless their disk already covered the whole grid — then there is
-        # genuinely nothing to return and they are done)
-        not_covered = (
-            (F.col("_ring") < n_side // 2) | (F.col("_ring_y") < n_side)
-            if geodesic
-            else F.col("_ring") < n_side
-        )
-        missing = (
-            unresolved.join(cand, query_id, "left_anti")
-            .filter(not_covered)
-            .withColumn("_ring", (F.col("_ring") * 4).cast("int"))
-        )
-        if geodesic:
-            missing = missing.withColumn(
-                "_ring_y", (F.col("_ring_y") * 4).cast("int")
             )
-        nxt = remaining.unionByName(missing).localCheckpoint(eager=False)
-        n_rem = nxt.count()  # materializes cand + nxt checkpoints (1 job)
-        unresolved = nxt
-        if n_rem == 0:
-            unresolved = None
-            break
+            if geodesic:
+                remaining = remaining.withColumn(
+                    "_ring_y",
+                    F.when(F.col("_cnt") >= k, grown_y)
+                    .otherwise(F.col("_ry") * 4)
+                    .cast("int"),
+                ).drop("_ry")
+            remaining = remaining.drop("_cnt", "_kth", "_r")
+            # queries with ZERO candidates produce no cand row: widen them too
+            # (unless their disk already covered the whole grid — then there is
+            # genuinely nothing to return and they are done)
+            not_covered = (
+                (F.col("_ring") < n_side // 2) | (F.col("_ring_y") < n_side)
+                if geodesic
+                else F.col("_ring") < n_side
+            )
+            missing = (
+                unresolved.join(cand, query_id, "left_anti")
+                .filter(not_covered)
+                .withColumn("_ring", (F.col("_ring") * 4).cast("int"))
+            )
+            if geodesic:
+                missing = missing.withColumn(
+                    "_ring_y", (F.col("_ring_y") * 4).cast("int")
+                )
+            nxt = remaining.unionByName(missing).localCheckpoint(eager=False)
+            n_rem = nxt.count()  # materializes cand + nxt checkpoints (1 job)
+            unresolved = nxt
+            if n_rem == 0:
+                unresolved = None
+                break
 
-    if unresolved is not None:
-        raise RuntimeError("knn_join failed to converge (max_rounds exceeded)")
-    objects_c.unpersist()
+        if unresolved is not None:
+            raise RuntimeError("knn_join failed to converge (max_rounds exceeded)")
+    finally:
+        # released on every exit path, including the max_rounds error: the
+        # rounds' checkpoints hold what the result needs, not this cache
+        objects_c.unpersist()
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)

@@ -542,3 +542,25 @@ def test_read_stage_schema_matches_inference(spark, root):
     legacy = ckpt.read_stage(spark, root, "typed")
     assert legacy.schema == back.schema
     assert sorted(r[:-1] for r in legacy.collect()) == want
+
+
+def test_null_bucket_key_goes_to_bucket_0(spark, root):
+    """Rows with a NULL lineage key commit into bucket 0, and a resume that
+    replays bucket 0 brings them back with the rest of it."""
+    df = spark.range(10).withColumn(
+        "k", F.when(F.col("id") <= 7, F.col("id")))
+    m = ckpt.checkpoint_stage(df, root, "nullkey", "k", n_buckets=4)
+    assert ckpt.is_committed(root, "nullkey")
+    # bucket 0 holds ids 0 and 4 plus the two NULL keys
+    assert m["partitions"]["0"]["rows"] == 4
+    assert ckpt.read_stage(spark, root, "nullkey").count() == 10
+
+    base = os.path.join(root, "nullkey")
+    os.remove(os.path.join(base, ckpt._MARKER))
+    shutil.rmtree(os.path.join(base, "data", "part_bucket=0"))
+    assert ckpt.incomplete_buckets(root, "nullkey", 4) == [0]
+    r = ckpt.resume_stage(df, root, "nullkey", "k", n_buckets=4)
+    assert r["resumed_buckets"] == [0]
+    back = ckpt.read_stage(spark, root, "nullkey")
+    assert back.count() == 10
+    assert sorted(x.id for x in back.collect()) == list(range(10))

@@ -59,3 +59,17 @@ def test_knn_golden(spark, case, parts):
         assert got[0] == order
     else:
         assert got == expected, case
+
+
+def test_knn_releases_object_cache_when_it_fails(spark):
+    """A call that runs out of rounds still unpersists its object table."""
+    rng = np.random.default_rng(5)
+    objs = [(i, float(x), float(y))
+            for i, (x, y) in enumerate(rng.normal(0.0, 0.5, (1000, 2)))]
+    odf = spark.createDataFrame(objs, "oid int, ox double, oy double")
+    qdf = spark.createDataFrame([(0, 170.0, 80.0)], "qid int, qx double, qy double")
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    with pytest.raises(RuntimeError, match="max_rounds"):
+        knn_join(qdf, odf, k=5, query_id="qid", qx="qx", qy="qy", max_rounds=1)
+    assert cache.isEmpty()
