@@ -20,15 +20,35 @@ Metrics mirror the reference's join accumulators
 (``JoinQuery.java:683-686``, ``core/monitoring/Metrics.java``) but are made
 durable in the manifest.
 
-A commit runs no Spark job that only re-derives what the committer already
-knows:
+A stage costs one Spark job, its write:
 
-* **Footer-verified commit.** Per-bucket rows come from the written parquet
-  footers (the same numbers a Spark ``count()`` over parquet reads) and
-  bytes from the file sizes; the commit refuses, before the marker, when the
-  non-empty buckets' rows differ from the pre-manifest counted before the
-  write. :func:`checkpoint_stage` and :func:`resume_stage` share this path,
-  so both write the same manifest fields.
+* **Staged write, counted on the write.** The bucketed DataFrame is
+  written once, partitioned by ``part_bucket``, to ``<stage>/_staging``.
+  An :class:`~pyspark.sql.Observation` on that write counts the rows of
+  every bucket (``count_if(part_bucket = b)``). Spark merges the
+  accumulator updates of a result task once per partition, so the counts
+  are those of the rows that entered the writer, computed independently of
+  the files the writer left: a file lost or cut short after the write still
+  shows up as a mismatch against the footers. No cache of the DataFrame and
+  no second counting job is needed.
+* **Commit order.** (1) ``_premanifest.json`` from the observed counts;
+  (2) each ``part_bucket=<b>`` directory renamed from staging into
+  ``data/`` (``os.rename``: atomic per bucket on one local filesystem);
+  (3) staging removed; (4) :func:`_commit`. No data file is in ``data/``
+  before the pre-manifest exists.
+* **Footer-verified commit.** Per-bucket rows come from the parquet footers
+  (the same numbers a Spark ``count()`` over parquet reads) and bytes from
+  the file sizes; the commit refuses, before the marker, when the non-empty
+  buckets' rows differ from the pre-manifest. :func:`checkpoint_stage` and
+  :func:`resume_stage` share the staged writer and this commit, so both
+  write the same manifest fields.
+* **Crash windows.** A crash during the write leaves ``_staging`` and no
+  pre-manifest, so the resume redoes the stage. A crash during the renames
+  leaves whole buckets in ``data/`` and the rest in ``_staging``: the
+  resume deletes staging and replays only the buckets missing from
+  ``data/`` (:func:`incomplete_buckets`). A crash between the manifest and
+  the marker leaves an uncommitted stage whose buckets all verify, so the
+  resume writes nothing and commits.
 * **Schema in the manifest.** The manifest records the stage schema as
   parquet read-back infers it (data columns nullable, ``part_bucket int``);
   :func:`read_stage` reads with it, so read-back infers nothing and an empty
@@ -43,7 +63,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -57,6 +77,7 @@ from pyspark.sql.types import (
 _MARKER = "_SUCCESS.sedona_spark"
 _MANIFEST = "_manifest.json"
 _PREMANIFEST = "_premanifest.json"
+_STAGING = "_staging"
 
 
 def _bucket_rows_durable(data_dir: str, entry: str) -> int:
@@ -151,6 +172,32 @@ def _with_bucket(df: DataFrame, bucket_col: str, n_buckets: int) -> DataFrame:
     )
 
 
+def _write_staged(
+    out: DataFrame, base: str, buckets: list[int]
+) -> dict[int, int]:
+    """Write ``out`` (which has ``part_bucket``) in one job to
+    ``<base>/_staging``, partitioned by bucket, and return the rows of each
+    of ``buckets`` as observed on that write (the non-empty ones)."""
+    obs = Observation()
+    b = F.col("part_bucket")
+    out.observe(obs, *[F.count_if(b == i).alias(str(i)) for i in buckets]) \
+        .write.mode("overwrite").partitionBy("part_bucket") \
+        .parquet(os.path.join(base, _STAGING))
+    return {int(k): int(n) for k, n in obs.get.items() if n}
+
+
+def _move_staged(base: str, data_dir: str) -> None:
+    """Rename each staged bucket directory into ``data_dir``, then remove
+    the staging directory. A rename onto an existing bucket fails."""
+    staging = os.path.join(base, _STAGING)
+    os.makedirs(data_dir, exist_ok=True)
+    for entry in sorted(os.listdir(staging)):
+        if entry.startswith("part_bucket="):
+            os.rename(os.path.join(staging, entry),
+                      os.path.join(data_dir, entry))
+    shutil.rmtree(staging)
+
+
 def _commit(
     base: str, data_dir: str, man_path: str, head: dict,
     expected: dict[int, int] | None, t0: float,
@@ -208,21 +255,12 @@ def checkpoint_stage(
 
     t0 = time.time()
     out = _with_bucket(df, bucket_col, n_buckets)
-    # pre-manifest BEFORE the data write: expected rows per bucket make
-    # bucket durability *verifiable* — a bucket dir left by a crashed commit
-    # (v2 committer, object-store direct write) is only trusted on resume if
-    # its actual footer row count matches. persist() so the expected counts
-    # and the write share one computation of df.
-    out = out.persist()
-    expected = {
-        int(r["part_bucket"]): int(r["n"])
-        for r in out.groupBy("part_bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    os.makedirs(base, exist_ok=True)
+    expected = _write_staged(out, base, list(range(n_buckets)))
+    # the pre-manifest goes down before any bucket reaches data/, so a
+    # resume can verify every bucket it finds there
     with open(os.path.join(base, _PREMANIFEST), "w") as f:
         json.dump({str(b): n for b, n in sorted(expected.items())}, f)
-    out.write.mode("overwrite").partitionBy("part_bucket").parquet(data_dir)
-    out.unpersist()
+    _move_staged(base, data_dir)
     head = {"stage": stage, "bucket_col": bucket_col, "n_buckets": n_buckets,
             "schema": _stage_schema(df)}
     return _commit(base, data_dir, man_path, head, expected, t0)
@@ -251,11 +289,12 @@ def incomplete_buckets(root: str, stage: str, n_buckets: int) -> list[int]:
     stage input on ``bucket % n == b`` for the missing b's and append.
 
     Durability is verified, not inferred: when the pre-manifest (written
-    before the data write) exists, a bucket counts as complete only if its
-    parquet-footer row total equals the expected count — a dir merely
-    *containing* files (v1 committer crash mid-rename, v2/direct committers)
-    is otherwise silently partial. Without a pre-manifest (legacy stage) the
-    weaker any-parquet-file heuristic applies."""
+    before any bucket is moved into ``data/``) exists, a bucket counts as
+    complete only if its parquet-footer row total equals the expected count
+    — a dir merely *containing* files (a torn or lost file) is otherwise
+    silently partial. Buckets still in ``_staging`` are not counted. Without
+    a pre-manifest (a crash during the write, or a legacy stage) the weaker
+    any-parquet-file heuristic applies."""
     base, data_dir, man_path = _stage_paths(root, stage)
     if os.path.exists(os.path.join(base, _MARKER)):
         return []
@@ -292,8 +331,10 @@ def resume_stage(
         return checkpoint_stage(df, root, stage, bucket_col, n_buckets)
 
     t0 = time.time()
-    # delete any PARTIAL bucket dirs being replayed — appending into a
-    # half-written bucket would duplicate its surviving rows
+    # delete what a crash left of the buckets being replayed: the staging
+    # directory and any PARTIAL bucket dir (a replayed bucket cannot be
+    # renamed onto it)
+    shutil.rmtree(os.path.join(base, _STAGING), ignore_errors=True)
     for b in missing:
         p = os.path.join(data_dir, f"part_bucket={b}")
         if os.path.exists(p):
@@ -301,7 +342,8 @@ def resume_stage(
     if missing:
         todo = _with_bucket(df, bucket_col, n_buckets).filter(
             F.col("part_bucket").isin([int(b) for b in missing]))
-        todo.write.mode("append").partitionBy("part_bucket").parquet(data_dir)
+        _write_staged(todo, base, missing)
+        _move_staged(base, data_dir)
 
     head = {"stage": stage, "bucket_col": bucket_col, "n_buckets": n_buckets,
             "schema": _stage_schema(df),

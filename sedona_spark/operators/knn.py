@@ -459,6 +459,7 @@ def knn_join(
         (F.col("_cnt") >= k) & (F.col("_kth") <= bound)
     ) | full_cover
 
+    rounds: list[DataFrame] = []  # each round's localCheckpoint frames
     try:
         for _ in range(max_rounds):
             disk = _disk_join(unresolved, objects_c, level, qx, qy, obj_x, obj_y, metric)
@@ -478,6 +479,7 @@ def knn_join(
                 .withColumn("_done", done_expr)
                 .localCheckpoint(eager=False)
             )
+            rounds.append(cand)
             results.append(
                 cand.filter(F.col("_done")).drop("_cnt", "_kth", "_done")
             )
@@ -562,6 +564,7 @@ def knn_join(
                     "_ring_y", (F.col("_ring_y") * 4).cast("int")
                 )
             nxt = remaining.unionByName(missing).localCheckpoint(eager=False)
+            rounds.append(nxt)
             n_rem = nxt.count()  # materializes cand + nxt checkpoints (1 job)
             unresolved = nxt
             if n_rem == 0:
@@ -570,6 +573,12 @@ def knn_join(
 
         if unresolved is not None:
             raise RuntimeError("knn_join failed to converge (max_rounds exceeded)")
+    except BaseException:
+        # no result will read the rounds' checkpoints: drop their blocks
+        # (on success the returned DataFrame still reads them)
+        for r in rounds:
+            r._jdf.queryExecution().logical().rdd().unpersist(False)
+        raise
     finally:
         # released on every exit path, including the max_rounds error: the
         # rounds' checkpoints hold what the result needs, not this cache

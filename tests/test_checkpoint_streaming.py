@@ -564,3 +564,109 @@ def test_null_bucket_key_goes_to_bucket_0(spark, root):
     back = ckpt.read_stage(spark, root, "nullkey")
     assert back.count() == 10
     assert sorted(x.id for x in back.collect()) == list(range(10))
+
+
+def test_checkpoint_stage_one_job(spark, root, count_jobs):
+    """A stage is one Spark job, its write: the per-bucket counts are
+    observed on that write, and the commit reads only parquet footers."""
+    df = _df(spark).select("id", "cell")
+    m, jobs = count_jobs(
+        lambda: ckpt.checkpoint_stage(df, root, "one", "cell", n_buckets=8))
+    assert sum(p["rows"] for p in m["partitions"].values()) == 1000
+    assert jobs == 1
+
+
+def test_crash_mid_write_leaves_staging_resume_commits(spark, root):
+    """A crash during the staged write leaves ``_staging`` and no
+    pre-manifest: the resume redoes the stage, commits every row and
+    removes the staging directory."""
+    df = _df(spark)
+    ckpt.checkpoint_stage(df, root, "mw", "cell", n_buckets=8)
+    base = os.path.join(root, "mw")
+    for f in (ckpt._MARKER, ckpt._MANIFEST, ckpt._PREMANIFEST):
+        os.remove(os.path.join(base, f))
+    os.rename(os.path.join(base, "data"), os.path.join(base, ckpt._STAGING))
+    assert ckpt.incomplete_buckets(root, "mw", 8) == list(range(8))
+
+    m = ckpt.resume_stage(df, root, "mw", "cell", n_buckets=8)
+    assert sum(p["rows"] for p in m["partitions"].values()) == 1000
+    assert not os.path.exists(os.path.join(base, ckpt._STAGING))
+    back = ckpt.read_stage(spark, root, "mw")
+    assert back.select("id").distinct().count() == back.count() == 1000
+
+
+def test_crash_mid_rename_replays_only_unmoved_buckets(spark, root,
+                                                       monkeypatch):
+    """A crash after 2 of 8 bucket renames: the moved buckets are complete,
+    the rest are listed as incomplete, and the resume replays exactly those
+    into a manifest equal to a fresh stage's."""
+    df = _df(spark)
+    fresh = ckpt.checkpoint_stage(df, root, "fresh", "cell", n_buckets=8)
+    assert len(fresh["partitions"]) == 8
+    real, moved = os.rename, []
+
+    def crash_after_two(src, dst):
+        if len(moved) == 2:
+            raise OSError("crash mid-rename")
+        real(src, dst)
+        moved.append(int(os.path.basename(src).split("=", 1)[1]))
+
+    monkeypatch.setattr(ckpt.os, "rename", crash_after_two)
+    with pytest.raises(OSError, match="crash mid-rename"):
+        ckpt.checkpoint_stage(df, root, "mr", "cell", n_buckets=8)
+    monkeypatch.undo()
+    base = os.path.join(root, "mr")
+    assert os.path.isdir(os.path.join(base, ckpt._STAGING))
+    unmoved = sorted(set(range(8)) - set(moved))
+    assert ckpt.incomplete_buckets(root, "mr", 8) == unmoved
+
+    m = ckpt.resume_stage(df, root, "mr", "cell", n_buckets=8)
+    assert m["resumed_buckets"] == unmoved
+    assert not os.path.exists(os.path.join(base, ckpt._STAGING))
+    assert ({b: p["rows"] for b, p in m["partitions"].items()}
+            == {b: p["rows"] for b, p in fresh["partitions"].items()})
+    back = ckpt.read_stage(spark, root, "mr")
+    assert back.select("id").distinct().count() == back.count() == 1000
+
+
+def test_many_buckets_commit_exact_rows(spark, root):
+    """256 observed per-bucket counts on one write match the rows each
+    bucket really holds."""
+    df = spark.range(1000).withColumn("k", F.col("id") * 7)
+    m = ckpt.checkpoint_stage(df, root, "b256", "k", n_buckets=256)
+    want = {}
+    for i in range(1000):
+        want[str(i * 7 % 256)] = want.get(str(i * 7 % 256), 0) + 1
+    assert {b: p["rows"] for b, p in m["partitions"].items()} == want
+    with open(os.path.join(root, "b256", ckpt._PREMANIFEST)) as f:
+        assert json.load(f) == want
+
+
+def test_empty_write_observation_returns(spark, root):
+    """An observed write of no rows (empty input partitions, or none at
+    all) still completes its Observation, whose ``get`` would otherwise
+    block; the empty stage commits with an empty pre-manifest."""
+    import threading
+
+    empties = {"filtered": spark.range(10).filter("id < 0"),
+               "local": spark.createDataFrame([], "id long")}
+    for name, df in empties.items():
+        out = {}
+
+        def stage():
+            try:
+                out["m"] = ckpt.checkpoint_stage(df, root, name, "id",
+                                                 n_buckets=4)
+            except BaseException as e:
+                out["err"] = e
+
+        t = threading.Thread(target=stage, daemon=True)
+        t.start()
+        t.join(120)
+        assert not t.is_alive(), f"{name}: checkpoint_stage blocked"
+        if "err" in out:
+            raise out["err"]
+        assert out["m"]["partitions"] == {} and ckpt.is_committed(root, name)
+        with open(os.path.join(root, name, ckpt._PREMANIFEST)) as f:
+            assert json.load(f) == {}
+        assert ckpt.read_stage(spark, root, name).count() == 0

@@ -73,3 +73,18 @@ def test_knn_releases_object_cache_when_it_fails(spark):
     with pytest.raises(RuntimeError, match="max_rounds"):
         knn_join(qdf, odf, k=5, query_id="qid", qx="qx", qy="qy", max_rounds=1)
     assert cache.isEmpty()
+
+
+def test_knn_releases_round_checkpoints_when_it_fails(spark):
+    """A call that runs out of rounds leaves no round checkpoint blocks
+    registered (the rounds' ``localCheckpoint`` RDDs are unpersisted)."""
+    rng = np.random.default_rng(5)
+    objs = [(i, float(x), float(y))
+            for i, (x, y) in enumerate(rng.normal(0.0, 0.5, (1000, 2)))]
+    odf = spark.createDataFrame(objs, "oid int, ox double, oy double")
+    qdf = spark.createDataFrame([(0, 170.0, 80.0)], "qid int, qx double, qy double")
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    with pytest.raises(RuntimeError, match="max_rounds"):
+        knn_join(qdf, odf, k=5, query_id="qid", qx="qx", qy="qy", max_rounds=1)
+    assert persistent().size() == before

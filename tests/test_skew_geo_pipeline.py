@@ -163,10 +163,13 @@ def test_pipeline_publish_to_icetable(spark, tmp_path):
 
 def test_pipeline_job_budget(spark, tmp_path, count_jobs):
     """Spark jobs one published pipeline run takes on the fixture above.
-    Stage commits read parquet footers and read-back uses the manifest's
-    schema, so neither runs a job. The count was 31 while every commit
-    re-read its stage (schema inference plus a grouped count), read-back
-    inferred the schema, and table file stats took a shuffle."""
+    Each of the three stages writes in one job that also counts its buckets
+    (an Observation); the other jobs are the stages' own shuffles and the
+    publish. Stage commits read parquet footers and read-back uses the
+    manifest's schema, so neither runs a job. The count was 31 while every
+    commit re-read its stage (schema inference plus a grouped count),
+    read-back inferred the schema, and table file stats took a shuffle, and
+    18 while each stage cached its input for a grouped pre-count."""
     img_path = str(tmp_path / "imgs")
     synthesize_images(spark, 40, partitions=4).write.parquet(img_path)
     zones = spark.createDataFrame(
@@ -177,4 +180,4 @@ def test_pipeline_job_budget(spark, tmp_path, count_jobs):
         spark, img_path, zones, str(tmp_path / "snap"), tile=16, level=6,
         n_buckets=8, publish_table=str(tmp_path / "tbl")))
     assert m["publish"]["already_published"] is False
-    assert jobs == 18
+    assert jobs == 9
