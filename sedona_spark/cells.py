@@ -127,21 +127,39 @@ def cover_bbox(
     xmin: Column, ymin: Column, xmax: Column, ymax: Column, level: int
 ) -> tuple[Column, Column, Column, Column]:
     """Grid-index ranges (gx0, gx1, gy0, gy1) of the cells covering an
-    envelope. Explode with::
-
-        df.withColumn("cx", F.explode(F.sequence(gx0, gx1)))
-          .withColumn("cy", F.explode(F.sequence(gy0, gy1)))
-          .withColumn("cell", cell_of(F.col("cx"), F.col("cy"), level))
-
-    This is the replicate-to-overlapping-cells placement of the reference
-    (``EqualPartitioning.placeObject``, ``EqualPartitioning.java:98-124``)
-    as a pure Column pipeline.
+    envelope; :func:`explode_cells` over ``sequence(gx0, gx1)`` ×
+    ``sequence(gy0, gy1)`` is the replicate-to-overlapping-cells placement
+    of the reference (``EqualPartitioning.placeObject``,
+    ``EqualPartitioning.java:98-124``) as a pure Column pipeline.
     """
     return (
         _grid_x(xmin, level),
         _grid_x(xmax, level),
         _grid_y(ymin, level),
         _grid_y(ymax, level),
+    )
+
+
+def explode_cells(
+    df: "DataFrame", xs: Column, ys: Column, level: int, wrap: bool = False
+) -> "DataFrame":
+    """Replicate each row to every cell of the grid-index rectangle
+    ``xs`` × ``ys`` (two ``sequence`` Columns), with the packed id in a new
+    ``cell`` column — the one place rows are copied to cells. ``wrap=True``
+    takes x modulo the ring (cyclic longitude: an x range may run past
+    either edge of the grid)."""
+    if wrap:
+        df = (
+            df.withColumn("_gxr", F.explode(xs))
+            .withColumn("_gx", F.pmod(F.col("_gxr"), F.lit(1 << level)))
+            .drop("_gxr")
+        )
+    else:
+        df = df.withColumn("_gx", F.explode(xs))
+    return (
+        df.withColumn("_gy", F.explode(ys))
+        .withColumn("cell", cell_of(F.col("_gx"), F.col("_gy"), level))
+        .drop("_gx", "_gy")
     )
 
 
@@ -362,16 +380,6 @@ def hex_cell_id(x_expr: str, y_expr: str, size: float) -> Column:
     is the SAME text the DuckDB twin renders, so both engines compute
     bit-identical ids."""
     return F.expr(sql_hex_cell_id(x_expr, y_expr, size))
-
-
-def hex_cell_center(cell: Column, size: float) -> tuple[Column, Column]:
-    """Inverse: packed id -> hex center (flat-top axial to cartesian)."""
-    s = float(size)
-    q = (cell / (2 * _HEX_OFF)).cast("bigint") - _HEX_OFF
-    r = (cell % (2 * _HEX_OFF)) - _HEX_OFF
-    cx = F.lit(s * 1.5) * q
-    cy = (F.lit(s * math.sqrt(3.0)) * (r + q / F.lit(2.0)))
-    return cx, cy
 
 
 def sql_hex_cell_id(x_expr: str, y_expr: str, size: float) -> str:

@@ -857,18 +857,6 @@ def st_transform_cea_inv(
     return F.lit(lon0) + lam / F.lit(_RAD), phi / F.lit(_RAD)
 
 
-def sql_cea(
-    lon_expr: str, lat_expr: str, lon0: float, lat_ts: float,
-    fe: float = 0.0, fn: float = 0.0,
-) -> tuple[str, str]:
-    """Engine-portable SQL twin of :func:`st_transform_cea`."""
-    k0 = _mf(lat_ts * _RAD, _E2W)
-    x = (f"({float(fe)!r} + {_R * k0!r} * ({lon_expr} - {float(lon0)!r}) "
-         f"* {_RAD!r})")
-    y = f"({float(fn)!r} + {_R / (2.0 * k0)!r} * {_q_sql(lat_expr)})"
-    return x, y
-
-
 # Published conic / polar / azimuthal parameter sets, keyed by EPSG code:
 # (kind, lon0, lat0-or-lat_ts, sp1, sp2, false_easting, false_northing).
 # Parameters are the public EPSG registry values; the math is the Snyder

@@ -512,8 +512,8 @@ def rs_zonal_stats_agg(
     north-up geotransform as ``rs_pixel_as_points``), boundary excluded —
     fixture lattices keep centers off zone boundaries by construction.
 
-    ``zones`` must be broadcast-sized (the same contract as
-    ``pip_join(broadcast_zones=True)``): key + packed ``ring`` column, or
+    ``zones`` must be broadcast-sized (collected to the driver): key +
+    packed ``ring`` column, or
     a multi-ring ``geom`` column (holes / MultiPolygon, even-odd).
     Reference: RS_ZonalStats ``RasterBandAccessors.java`` zonal path."""
     multi = ring_col not in zones.columns and "geom" in zones.columns

@@ -41,11 +41,6 @@ def wkb_points_batch(x, y) -> list[bytes]:
     return [flat[i * 21 : (i + 1) * 21] for i in range(n)]
 
 
-def wkb_linestring(coords) -> bytes:
-    a = np.asarray(coords, dtype="<f8").reshape(-1, 2)
-    return struct.pack("<BII", 1, WKB_LINESTRING, len(a)) + a.tobytes()
-
-
 def wkb_polygon(ring) -> bytes:
     """Single-ring polygon; closes the ring if open."""
     a = np.asarray(ring, dtype="<f8").reshape(-1, 2)

@@ -57,9 +57,9 @@ def distance_join_meters(
         F.lit(sin_half) / cos_edge >= 1.0, F.lit(360.0)
     ).otherwise(F.degrees(F.lit(2.0) * F.asin(ratio)))
 
-    # longitude is CYCLIC: the x-disk wraps across the antimeridian via
-    # pmod. kx is capped at the half-ring so wrap never duplicates a cell
-    # (kx ≥ n/2 ⇒ the full ring, exactly once).
+    # longitude is CYCLIC: the x-disk wraps across the antimeridian
+    # (``explode_cells(wrap=True)``). kx is capped at the half-ring so wrap
+    # never duplicates a cell (kx ≥ n/2 ⇒ the full ring, exactly once).
     kx = F.least(F.lit(n // 2), F.ceil(dlon_deg / F.lit(w_deg))).cast("int")
     ky = F.least(F.lit(n), F.ceil(dlat_deg / F.lit(h_deg))).cast("int")
 
@@ -69,13 +69,7 @@ def distance_join_meters(
         kx >= n // 2, F.sequence(F.lit(0), F.lit(n - 1))
     ).otherwise(F.sequence(cx - kx, cx + kx))
     ys = F.sequence(F.greatest(F.lit(0), cy - ky), F.least(F.lit(n - 1), cy + ky))
-    pc = (
-        probe.withColumn("_gxr", F.explode(xs))
-        .withColumn("_gx", F.pmod(F.col("_gxr"), F.lit(n)))
-        .withColumn("_gy", F.explode(ys))
-        .withColumn("cell", cells.cell_of(F.col("_gx"), F.col("_gy"), level))
-        .drop("_gxr", "_gx", "_gy")
-    )
+    pc = cells.explode_cells(probe, xs, ys, level, wrap=True)
     bc = build.withColumn(
         "cell", cells.cell_id(F.col(build_lon), F.col(build_lat), level)
     )

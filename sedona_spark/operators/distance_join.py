@@ -45,13 +45,7 @@ def distance_join(
     kx, ky = cells.disk_radii_for_distance(r, level)
     home = cells.cell_id(F.col(probe_x), F.col(probe_y), level)
     xs, ys = cells.grid_disk_cells(home, level, kx, ky)
-    pc = (
-        probe.withColumn("_home", home)
-        .withColumn("_gx", F.explode(xs))
-        .withColumn("_gy", F.explode(ys))
-        .withColumn("cell", cells.cell_of(F.col("_gx"), F.col("_gy"), level))
-        .drop("_home", "_gx", "_gy")
-    )
+    pc = cells.explode_cells(probe, xs, ys, level)
     bc = build.withColumn("cell", cells.cell_id(F.col(build_x), F.col(build_y), level))
     j = pc.join(bc, "cell").drop("cell")
     d2 = st.st_distance_sq(

@@ -88,35 +88,26 @@ def _disk_join(
     cx, cy = cells.cell_x(home), cells.cell_y(home)
     rng = F.col("_ring")
     rng_y = F.col("_ring_y") if "_ring_y" in queries.columns else rng
-    if metric in ("sphere", "spheroid"):
-        # longitude is CYCLIC on the sphere: wrap the x-range via pmod so a
-        # query at lon 179.9 probes cells across the antimeridian instead
-        # of escalating to the full grid (same wrap as distance_geo.py);
+    geodesic = metric in ("sphere", "spheroid")
+    if geodesic:
+        # longitude is CYCLIC on the sphere: wrap the x-range so a query at
+        # lon 179.9 probes cells across the antimeridian instead of
+        # escalating to the full grid (same wrap as distance_geo.py);
         # capped at the half-ring so wrap never duplicates a cell
         kx = F.least(rng, F.lit(n // 2))
         xs = F.when(
             rng >= n // 2, F.sequence(F.lit(0), F.lit(n - 1))
         ).otherwise(F.sequence(cx - kx, cx + kx))
-        qc = (
-            queries.withColumn("_gxr", F.explode(xs))
-            .withColumn("_gx", F.pmod(F.col("_gxr"), F.lit(n)))
-            .drop("_gxr")
-        )
     else:
         xs = F.sequence(
             F.greatest(F.lit(0), cx - rng), F.least(F.lit(n - 1), cx + rng)
         )
-        qc = queries.withColumn("_gx", F.explode(xs))
     ys = F.sequence(
         F.greatest(F.lit(0), cy - rng_y), F.least(F.lit(n - 1), cy + rng_y)
     )
-    qc = (
-        qc.withColumn("_gy", F.explode(ys))
-        .withColumn("cell", cells.cell_of(F.col("_gx"), F.col("_gy"), level))
-        .drop("_gx", "_gy")
-    )
+    qc = cells.explode_cells(queries, xs, ys, level, wrap=geodesic)
     j = qc.join(objects_c, "cell").drop("cell")
-    if metric in ("sphere", "spheroid"):
+    if geodesic:
         dist_fn = st_distance_sphere if metric == "sphere" else st_distance_spheroid
         return j.withColumn(
             "dist_m",

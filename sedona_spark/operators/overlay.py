@@ -5,9 +5,10 @@ Reference: ``expressions/AggregateFunctions.scala:48`` (ST_Union_Aggr),
 axis-aligned / convex ring path:
 
 * :func:`rect_overlay_area` — area-weighted zonal overlay: for each left
-  rect, Σ over intersecting right rects of the clip area. The join is the
-  standard cell-cover equi-join with reference-point dedup; the clip area
-  of two rects is closed-form Column math (zero Python).
+  rect, Σ over intersecting right rects of the clip area. The join is
+  ``spatial_join.envelope_pair_join`` (cell-cover equi-join with
+  reference-point dedup); the clip area of two rects is closed-form
+  Column math (zero Python).
 * :func:`union_area_by_key` — ST_Union_Aggr(envelope) analog: exact union
   AREA of a group of rects via an x-slab coordinate-compression sweep
   inside ``applyInPandas`` (one aggregate per group — the same cascaded-
@@ -27,8 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sedona_spark import cells
-from sedona_spark.functions import st
+from sedona_spark.operators.spatial_join import envelope_pair_join
 
 
 def rect_overlay_area(
@@ -44,17 +44,7 @@ def rect_overlay_area(
     intersection area with right rects (strictly-positive pieces only)."""
     lx0, ly0, lx1, ly1 = (F.col(c) for c in l)
     rx0, ry0, rx1, ry1 = (F.col(c) for c in r)
-    lc = left
-    rc = right
-    from sedona_spark.operators.spatial_join import _explode_cover
-
-    lcc = _explode_cover(lc, level, *l)
-    rcc = _explode_cover(rc, level, *r)
-    j = lcc.join(rcc, "cell")
-    j = j.filter(st.env_intersects(lx0, ly0, lx1, ly1, rx0, ry0, rx1, ry1))
-    ref_x = F.greatest(lx0, rx0)
-    ref_y = F.greatest(ly0, ry0)
-    j = j.filter(F.col("cell") == cells.cell_id(ref_x, ref_y, level))
+    j = envelope_pair_join(left, right, level, l, r)
     w = F.least(lx1, rx1) - F.greatest(lx0, rx0)
     h = F.least(ly1, ry1) - F.greatest(ly0, ry0)
     j = j.withColumn("_piece", w * h).filter(F.col("_piece") > 0)

@@ -9,8 +9,8 @@ reference point (``core/joinJudgement/DuplicatesFilter.java:46-71``,
 
 Spark-first re-expression:
 
-* replication  = ``explode(sequence(gx0,gx1)) × explode(sequence(gy0,gy1))``
-  over the envelope's covering cells — pure Column math;
+* replication  = ``cells.explode_cells`` over the envelope's covering cells
+  (:func:`_explode_cover`) — pure Column math;
 * partitioning = the hash shuffle of the cell equi-join itself (no custom
   partitioner; AQE handles skew/coalesce);
 * refine       = envelope test (SQL) + exact kernel (rect: pure SQL;
@@ -21,6 +21,19 @@ Spark-first re-expression:
   a single cell, so point-side joins are duplicate-free by construction
   (same shortcut as ``GeomUtils.java:361-364``).
 
+Every join here is one of two candidate skeletons plus its refine:
+
+* point × zone (:func:`_pip_join`, :func:`pip_join_rect`): the point keeps
+  its home cell, the zone explodes to its cover, and the keep test is the
+  only difference between the ring, multi-ring and rectangle joins. The
+  semi/anti/outer spellings join the matched set back on the point or
+  zone id.
+* envelope × envelope (:func:`envelope_pair_join`): both sides explode to
+  their covers, candidates need intersecting envelopes, and the
+  reference-point rule drops duplicate pairs. The line, polygon-predicate,
+  polygon-overlap and ``overlay.rect_overlay_area`` joins differ only in
+  their refine.
+
 Scale notes (100 TB posture): both inputs shuffle once, on an int64 key;
 the zone side is usually small → Catalyst auto-broadcasts it, removing the
 big side's shuffle entirely. No sampling, no driver-side tree build — layout
@@ -29,32 +42,66 @@ is closed-form from ``level``, which also makes checkpoint/resume sound.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sedona_spark import cells
 from sedona_spark.functions import st
 
+_ENV = ("xmin", "ymin", "xmax", "ymax")
+_L_ENV = ("_lxmin", "_lymin", "_lxmax", "_lymax")
+_R_ENV = ("_rxmin", "_rymin", "_rxmax", "_rymax")
+
+
+def _boundary_counts(predicate: str) -> bool:
+    """Does a point on the zone boundary match? 'contains' is interior
+    only; 'covers'/'intersects' count the boundary (reference boundary
+    split, ``SpatialPredicateEvaluators.java:25-80``)."""
+    if predicate not in ("contains", "covers", "intersects"):
+        raise ValueError(f"unsupported join predicate {predicate!r}")
+    return predicate != "contains"
+
+
+def _rect_keep(predicate: str, x: str, y: str) -> Column:
+    """Keep test of point (x, y) against the xmin..ymax rectangle."""
+    px, py = F.col(x), F.col(y)
+    x0, y0, x1, y1 = (F.col(c) for c in _ENV)
+    if _boundary_counts(predicate):
+        return (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
+    return (px > x0) & (px < x1) & (py > y0) & (py < y1)
+
 
 def _explode_cover(
     df: DataFrame, level: int, xmin="xmin", ymin="ymin", xmax="xmax", ymax="ymax",
-    cell_col: str = "cell",
 ) -> DataFrame:
     """Replicate each row to all cells its envelope covers (pure SQL)."""
     gx0, gx1, gy0, gy1 = cells.cover_bbox(
         F.col(xmin), F.col(ymin), F.col(xmax), F.col(ymax), level
     )
-    return (
-        df.withColumn("_gx", F.explode(F.sequence(gx0, gx1)))
-        .withColumn("_gy", F.explode(F.sequence(gy0, gy1)))
-        .withColumn(cell_col, cells.cell_of(F.col("_gx"), F.col("_gy"), level))
-        .drop("_gx", "_gy")
-    )
+    return cells.explode_cells(df, F.sequence(gx0, gx1), F.sequence(gy0, gy1), level)
 
 
 def with_envelope(df: DataFrame, ring: str = "ring") -> DataFrame:
     """Materialize envelope columns from a packed ring (pure SQL)."""
     return df.select("*", *st.st_envelope_cols(F.col(ring)))
+
+
+def _pip_join(
+    points: DataFrame, zones: DataFrame, env_geom: Column, cls: Column,
+    predicate: str, level: int, x: str, y: str,
+) -> DataFrame:
+    """Point × zone skeleton: home cell ⋈ envelope cover, envelope
+    prefilter (cheap, codegen'd), then the exact PIP class ``cls``
+    (0 out, 1 boundary, 2 interior)."""
+    keep = cls >= 1 if _boundary_counts(predicate) else cls == 2
+    if "xmin" not in zones.columns:
+        zones = zones.select("*", *st.st_envelope_cols(env_geom))
+    pc = points.withColumn("cell", cells.cell_id(F.col(x), F.col(y), level))
+    j = pc.join(_explode_cover(zones, level), "cell")
+    j = j.filter(
+        st.env_contains_point(*(F.col(c) for c in _ENV), F.col(x), F.col(y))
+    )
+    return j.filter(keep).drop("cell", *_ENV)
 
 
 def pip_join(
@@ -65,7 +112,6 @@ def pip_join(
     x: str = "x",
     y: str = "y",
     ring: str = "ring",
-    broadcast_zones: bool | None = None,
 ) -> DataFrame:
     """Join point rows to polygon rows whose polygon contains/covers them.
 
@@ -77,24 +123,31 @@ def pip_join(
     (boundary counts) — reference boundary split,
     ``SpatialPredicateEvaluators.java:25-80``.
     """
-    if "xmin" not in zones.columns:
-        zones = with_envelope(zones, ring)
-    zc = _explode_cover(zones, level)
-    pc = points.withColumn("cell", cells.cell_id(F.col(x), F.col(y), level))
-    if broadcast_zones is True:
-        zc = F.broadcast(zc)
-
-    j = pc.join(zc, "cell")
-    # envelope prefilter (cheap, codegen'd) before the exact kernel
-    j = j.filter(
-        st.env_contains_point(
-            F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-            F.col(x), F.col(y),
-        )
+    return _pip_join(
+        points, zones, F.col(ring), st.pip_class(F.col(ring), F.col(x), F.col(y)),
+        predicate, level, x, y,
     )
-    cls = st.pip_class(F.col(ring), F.col(x), F.col(y))
-    keep = cls == 2 if predicate == "contains" else cls >= 1
-    return j.filter(keep).drop("cell", "xmin", "ymin", "xmax", "ymax")
+
+
+def pip_join_multi(
+    points: DataFrame,
+    zones: DataFrame,
+    predicate: str = "covers",
+    level: int = 7,
+    x: str = "x",
+    y: str = "y",
+    geom: str = "geom",
+) -> DataFrame:
+    """PIP join against MULTI-RING geometries (polygons with holes,
+    MultiPolygon): ``geom`` is ``array<array<double>>`` of packed rings,
+    even-odd semantics. Same plan shape as :func:`pip_join` — cell
+    equi-join + envelope prefilter + ONE Arrow-batched refine; the envelope
+    is the min/max over all rings (flatten, pure SQL)."""
+    return _pip_join(
+        points, zones, F.flatten(F.col(geom)),
+        st.pip_class_multi(F.col(geom), F.col(x), F.col(y)),
+        predicate, level, x, y,
+    )
 
 
 def pip_join_rect(
@@ -104,7 +157,6 @@ def pip_join_rect(
     level: int = 7,
     x: str = "x",
     y: str = "y",
-    broadcast_zones: bool | None = None,
     salt: int = 0,
 ) -> DataFrame:
     """PIP join against axis-aligned rectangles (xmin..ymax columns) —
@@ -117,25 +169,24 @@ def pip_join_rect(
     row to every salt value, and the join key becomes (cell, salt) — the
     skew splitter that replaces the reference's sample-adaptive KDB-tree
     splits (``KDB.java``), composing with AQE's runtime skew-join."""
+    keep = _rect_keep(predicate, x, y)
     zc = _explode_cover(rects, level)
     pc = points.withColumn("cell", cells.cell_id(F.col(x), F.col(y), level))
-    join_keys = ["cell"]
-    if salt > 0:
-        pc = pc.withColumn("_salt", F.pmod(F.hash(F.col(x), F.col(y)), F.lit(salt)))
-        zc = zc.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-        join_keys = ["cell", "_salt"]
-    if broadcast_zones is True:
-        zc = F.broadcast(zc)
-    j = pc.join(zc, join_keys)
-    if salt > 0:
-        j = j.drop("_salt")
-    px, py = F.col(x), F.col(y)
-    x0, y0, x1, y1 = F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax")
-    if predicate == "contains":
-        keep = (px > x0) & (px < x1) & (py > y0) & (py < y1)
-    else:
-        keep = (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
-    return j.filter(keep).drop("cell")
+    if salt <= 0:
+        return pc.join(zc, "cell").filter(keep).drop("cell")
+    pc = pc.withColumn("_salt", F.pmod(F.hash(F.col(x), F.col(y)), F.lit(salt)))
+    zc = zc.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
+    return pc.join(zc, ["cell", "_salt"]).drop("_salt").filter(keep).drop("cell")
+
+
+def _pip_match_join(
+    points: DataFrame, rects: DataFrame, predicate: str, level: int,
+    x: str, y: str, id_col: str | None, how: str,
+) -> DataFrame:
+    key = id_col or points.columns[0]
+    matched = pip_join_rect(points, rects, predicate, level=level, x=x, y=y)
+    # joining against the matched id set keeps each point row exactly once
+    return points.join(matched.select(key).distinct(), key, how)
 
 
 def pip_semi_join(
@@ -154,10 +205,7 @@ def pip_semi_join(
 
     ``id_col`` names the unique point identity (defaults to the first
     column); semi/anti semantics are keyed on it, so it MUST be unique."""
-    key = id_col or points.columns[0]
-    matched = pip_join_rect(points, rects, predicate, level=level, x=x, y=y)
-    # left_semi against the matched id set keeps each point row exactly once
-    return points.join(matched.select(key).distinct(), key, "left_semi")
+    return _pip_match_join(points, rects, predicate, level, x, y, id_col, "left_semi")
 
 
 def pip_anti_join(
@@ -171,39 +219,7 @@ def pip_anti_join(
 ) -> DataFrame:
     """Points matching NO zone (LeftAnti spatial join). ``id_col`` as in
     :func:`pip_semi_join` — must be a unique point identity."""
-    key = id_col or points.columns[0]
-    matched = pip_join_rect(points, rects, predicate, level=level, x=x, y=y)
-    return points.join(matched.select(key).distinct(), key, "left_anti")
-
-
-def pip_join_multi(
-    points: DataFrame,
-    zones: DataFrame,
-    predicate: str = "covers",
-    level: int = 7,
-    x: str = "x",
-    y: str = "y",
-    geom: str = "geom",
-) -> DataFrame:
-    """PIP join against MULTI-RING geometries (polygons with holes,
-    MultiPolygon): ``geom`` is ``array<array<double>>`` of packed rings,
-    even-odd semantics. Same plan shape as :func:`pip_join` — cell
-    equi-join + envelope prefilter + ONE Arrow-batched refine; the envelope
-    is the min/max over all rings (flatten, pure SQL)."""
-    if "xmin" not in zones.columns:
-        zones = zones.select("*", *st.st_envelope_cols(F.flatten(F.col(geom))))
-    zc = _explode_cover(zones, level)
-    pc = points.withColumn("cell", cells.cell_id(F.col(x), F.col(y), level))
-    j = pc.join(zc, "cell")
-    j = j.filter(
-        st.env_contains_point(
-            F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"),
-            F.col(x), F.col(y),
-        )
-    )
-    cls = st.pip_class_multi(F.col(geom), F.col(x), F.col(y))
-    keep = cls == 2 if predicate == "contains" else cls >= 1
-    return j.filter(keep).drop("cell", "xmin", "ymin", "xmax", "ymax")
+    return _pip_match_join(points, rects, predicate, level, x, y, id_col, "left_anti")
 
 
 def pip_left_outer_join(
@@ -223,7 +239,7 @@ def pip_left_outer_join(
     id — the stream-side outer completion the reference does per-partition,
     re-expressed relationally. ``id_col`` must be unique per point."""
     key = id_col or points.columns[0]
-    zone_cols = [c for c in rects.columns if c not in ("xmin", "ymin", "xmax", "ymax")]
+    zone_cols = [c for c in rects.columns if c not in _ENV]
     matched = pip_join_rect(points, rects, predicate, level=level, x=x, y=y).select(
         key, *zone_cols
     )
@@ -251,6 +267,35 @@ def pip_right_outer_join(
     return rects.join(matched, zkey, "left")
 
 
+def envelope_pair_join(
+    left: DataFrame,
+    right: DataFrame,
+    level: int,
+    l_env: tuple[str, str, str, str],
+    r_env: tuple[str, str, str, str],
+) -> DataFrame:
+    """Envelope × envelope skeleton: every (left, right) pair whose
+    envelopes intersect, exactly once. ``l_env``/``r_env`` name each side's
+    (xmin, ymin, xmax, ymax) columns. Both sides replicate to their cover
+    cells; a matched pair is emitted only from the cell that contains the
+    pair's reference point (min corner of the envelope intersection) — the
+    dedup rule of ``DuplicatesFilter.java:46-71`` /
+    ``GeomUtils.isDuplicate:359-382`` as a Column predicate, no second
+    pass. All input columns pass through (names must be disjoint); the
+    exact refine is the caller's."""
+    lx0, ly0, lx1, ly1 = (F.col(c) for c in l_env)
+    rx0, ry0, rx1, ry1 = (F.col(c) for c in r_env)
+    lc, rc = _explode_cover(left, level, *l_env), _explode_cover(right, level, *r_env)
+    j = lc.join(rc, "cell").filter(st.env_intersects(lx0, ly0, lx1, ly1, rx0, ry0, rx1, ry1))
+    ref = cells.cell_id(F.greatest(lx0, rx0), F.greatest(ly0, ry0), level)
+    return j.filter(F.col("cell") == ref).drop("cell")
+
+
+def _with_env(df: DataFrame, geom: Column, names: tuple[str, ...]) -> DataFrame:
+    """Envelope of ``geom`` as columns ``names``."""
+    return df.select("*", *(c.alias(n) for c, n in zip(st.st_envelope_cols(geom), names)))
+
+
 def linestring_polygon_join(
     lines: DataFrame,
     zones: DataFrame,
@@ -263,29 +308,27 @@ def linestring_polygon_join(
 
     Both sides replicate to envelope-cover cells; pairs deduplicate by the
     reference-point rule; refine = ONE Arrow-batched segment/PIP kernel."""
-    lf = lines.select("*", *st.st_envelope_cols(F.col(line)))
-    lf = lf.withColumnsRenamed(
-        {"xmin": "_lxmin", "ymin": "_lymin", "xmax": "_lxmax", "ymax": "_lymax"}
-    )
-    rf = zones.select("*", *st.st_envelope_cols(F.flatten(F.col(geom))))
-    rf = rf.withColumnsRenamed(
-        {"xmin": "_rxmin", "ymin": "_rymin", "xmax": "_rxmax", "ymax": "_rymax"}
-    )
-    lc = _explode_cover(lf, level, "_lxmin", "_lymin", "_lxmax", "_lymax")
-    rc = _explode_cover(rf, level, "_rxmin", "_rymin", "_rxmax", "_rymax")
-    j = lc.join(rc, "cell")
-    j = j.filter(
-        st.env_intersects(
-            F.col("_lxmin"), F.col("_lymin"), F.col("_lxmax"), F.col("_lymax"),
-            F.col("_rxmin"), F.col("_rymin"), F.col("_rxmax"), F.col("_rymax"),
-        )
-    )
-    ref_x = F.greatest(F.col("_lxmin"), F.col("_rxmin"))
-    ref_y = F.greatest(F.col("_lymin"), F.col("_rymin"))
-    j = j.filter(F.col("cell") == cells.cell_id(ref_x, ref_y, level))
+    lf = _with_env(lines, F.col(line), _L_ENV)
+    rf = _with_env(zones, F.flatten(F.col(geom)), _R_ENV)
+    j = envelope_pair_join(lf, rf, level, _L_ENV, _R_ENV)
     j = j.filter(st.st_intersects_line_polygon(F.col(line), F.col(geom)))
-    return j.drop("cell", "_lxmin", "_lymin", "_lxmax", "_lymax",
-                  "_rxmin", "_rymin", "_rxmax", "_rymax")
+    return j.drop(*_L_ENV, *_R_ENV)
+
+
+def _polygon_join(
+    left: DataFrame, right: DataFrame, level: int,
+    left_ring: str, right_ring: str, refine,
+) -> DataFrame:
+    """Polygon × polygon candidates (rings renamed ``_lring``/``_rring``
+    so both sides may use one column name), filtered by ``refine``."""
+    lf = _with_env(left.withColumnRenamed(left_ring, "_lring"), F.col("_lring"), _L_ENV)
+    rf = _with_env(right.withColumnRenamed(right_ring, "_rring"), F.col("_rring"), _R_ENV)
+    j = refine(envelope_pair_join(lf, rf, level, _L_ENV, _R_ENV))
+    return (
+        j.drop(*_L_ENV, *_R_ENV)
+        .withColumnRenamed("_lring", left_ring)
+        .withColumnRenamed("_rring", right_ring)
+    )
 
 
 def polygon_predicate_join(
@@ -303,37 +346,13 @@ def polygon_predicate_join(
     :func:`polygon_overlap_join` (every non-disjoint predicate implies
     envelope overlap); refine computes the four primitive flags once and
     derives the requested predicate as a Column expression."""
-    lf = with_envelope(left.withColumnRenamed(left_ring, "_lring"), "_lring")
-    lf = lf.withColumnsRenamed(
-        {"xmin": "_lxmin", "ymin": "_lymin", "xmax": "_lxmax", "ymax": "_lymax"}
-    )
-    rf = with_envelope(right.withColumnRenamed(right_ring, "_rring"), "_rring")
-    rf = rf.withColumnsRenamed(
-        {"xmin": "_rxmin", "ymin": "_rymin", "xmax": "_rxmax", "ymax": "_rymax"}
-    )
-    lc = _explode_cover(lf, level, "_lxmin", "_lymin", "_lxmax", "_lymax")
-    rc = _explode_cover(rf, level, "_rxmin", "_rymin", "_rxmax", "_rymax")
-    j = lc.join(rc, "cell")
-    j = j.filter(
-        st.env_intersects(
-            F.col("_lxmin"), F.col("_lymin"), F.col("_lxmax"), F.col("_lymax"),
-            F.col("_rxmin"), F.col("_rymin"), F.col("_rxmax"), F.col("_rymax"),
-        )
-    )
-    ref_x = F.greatest(F.col("_lxmin"), F.col("_rxmin"))
-    ref_y = F.greatest(F.col("_lymin"), F.col("_rymin"))
-    j = j.filter(F.col("cell") == cells.cell_id(ref_x, ref_y, level))
-    flags = st.st_relate_flags(F.col("_lring"), F.col("_rring"))
-    j = j.withColumn("_flags", flags)
     preds = st.st_predicates_from_flags(F.col("_flags"))
     if predicate not in preds:
         raise ValueError(f"unsupported join predicate {predicate!r}")
-    j = j.filter(preds[predicate])
-    return (
-        j.drop("cell", "_flags", "_lxmin", "_lymin", "_lxmax", "_lymax",
-               "_rxmin", "_rymin", "_rxmax", "_rymax")
-        .withColumnRenamed("_lring", left_ring)
-        .withColumnRenamed("_rring", right_ring)
+    flags = st.st_relate_flags(F.col("_lring"), F.col("_rring"))
+    return _polygon_join(
+        left, right, level, left_ring, right_ring,
+        lambda j: j.withColumn("_flags", flags).filter(preds[predicate]).drop("_flags"),
     )
 
 
@@ -344,41 +363,12 @@ def polygon_overlap_join(
     left_ring: str = "l_ring",
     right_ring: str = "r_ring",
 ) -> DataFrame:
-    """Polygon×polygon INTERSECTS join with replicate-dedup.
-
-    Both sides replicate to their envelope-cover cells; a matched pair is
-    emitted only from the cell that contains the pair's reference point
-    (min corner of the envelope intersection) — the exact dedup rule of
-    ``DuplicatesFilter.java:46-71`` as a Column predicate, no second pass.
-    """
-    lf = with_envelope(left.withColumnRenamed(left_ring, "_lring"), "_lring")
-    lf = lf.withColumnsRenamed(
-        {"xmin": "_lxmin", "ymin": "_lymin", "xmax": "_lxmax", "ymax": "_lymax"}
-    )
-    rf = with_envelope(right.withColumnRenamed(right_ring, "_rring"), "_rring")
-    rf = rf.withColumnsRenamed(
-        {"xmin": "_rxmin", "ymin": "_rymin", "xmax": "_rxmax", "ymax": "_rymax"}
-    )
-    lc = _explode_cover(lf, level, "_lxmin", "_lymin", "_lxmax", "_lymax")
-    rc = _explode_cover(rf, level, "_rxmin", "_rymin", "_rxmax", "_rymax")
-
-    j = lc.join(rc, "cell")
-    j = j.filter(
-        st.env_intersects(
-            F.col("_lxmin"), F.col("_lymin"), F.col("_lxmax"), F.col("_lymax"),
-            F.col("_rxmin"), F.col("_rymin"), F.col("_rxmax"), F.col("_rymax"),
-        )
-    )
-    # reference-point dedup (GeomUtils.isDuplicate:359-382)
-    ref_x = F.greatest(F.col("_lxmin"), F.col("_rxmin"))
-    ref_y = F.greatest(F.col("_lymin"), F.col("_rymin"))
-    j = j.filter(F.col("cell") == cells.cell_id(ref_x, ref_y, level))
-    j = j.filter(st.st_intersects_polygons(F.col("_lring"), F.col("_rring")))
-    return (
-        j.drop("cell", "_lxmin", "_lymin", "_lxmax", "_lymax",
-               "_rxmin", "_rymin", "_rxmax", "_rymax")
-        .withColumnRenamed("_lring", left_ring)
-        .withColumnRenamed("_rring", right_ring)
+    """Polygon×polygon INTERSECTS join with replicate-dedup
+    (:func:`envelope_pair_join`), refined by the exact ring-intersection
+    kernel."""
+    hit = st.st_intersects_polygons(F.col("_lring"), F.col("_rring"))
+    return _polygon_join(
+        left, right, level, left_ring, right_ring, lambda j: j.filter(hit)
     )
 
 
@@ -402,11 +392,11 @@ def pip_join_compact(
     only driver-side state). Exact refine matches :func:`pip_join_rect`,
     so the two paths are interchangeable — and oracle-checked equal.
 
-    ``broadcast_cover`` mirrors ``pip_join``'s knob: True forces a
-    broadcast of each per-level cover slice (right for the
-    zone-side-small contract), False forces the shuffle equi-join (a
-    large zone table must NOT be collected to the driver), None lets AQE
-    decide from the compacted cover's actual size."""
+    ``broadcast_cover``: True forces a broadcast of the compacted cover
+    (right for the zone-side-small contract), False forces the shuffle
+    equi-join (a large zone table must NOT be collected to the driver),
+    None lets AQE decide from the compacted cover's actual size."""
+    keep = _rect_keep(predicate, x, y)
     cover = _explode_cover(rects, level)
     key_cols = [c for c in rects.columns]
     cur = (
@@ -461,12 +451,4 @@ def pip_join_compact(
         cov = F.broadcast(cov)
     elif broadcast_cover is False:
         cov = cov.hint("shuffle_hash")
-    j = pc.join(cov, "cell").drop("cell", "_home", "_lvl")
-    px, py = F.col(x), F.col(y)
-    x0, y0 = F.col("xmin"), F.col("ymin")
-    x1, y1 = F.col("xmax"), F.col("ymax")
-    if predicate == "contains":
-        keep = (px > x0) & (px < x1) & (py > y0) & (py < y1)
-    else:
-        keep = (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
-    return j.filter(keep)
+    return pc.join(cov, "cell").drop("cell", "_home", "_lvl").filter(keep)

@@ -123,12 +123,9 @@ def stream_stream_distance_join(
     gx0, gx1, gy0, gy1 = cells.cover_bbox(
         F.col(lon) - r, F.col(lat) - r, F.col(lon) + r, F.col(lat) + r, level
     )
-    rw = (
-        right.withWatermark(ts, watermark)
-        .withColumn("_gx", F.explode(F.sequence(gx0, gx1)))
-        .withColumn("_gy", F.explode(F.sequence(gy0, gy1)))
-        .withColumn("cell", cells.cell_of(F.col("_gx"), F.col("_gy"), level))
-        .drop("_gx", "_gy")
+    rw = cells.explode_cells(
+        right.withWatermark(ts, watermark),
+        F.sequence(gx0, gx1), F.sequence(gy0, gy1), level,
     )
     lt = lw.select(
         F.col("cell"),
