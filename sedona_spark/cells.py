@@ -191,16 +191,21 @@ def disk_radii_for_distance(r: float, level: int) -> tuple[int, int]:
 # ---------------------------------------------------------------------------
 
 
+def _np_clamp_index(raw: np.ndarray, n: int) -> np.ndarray:
+    """Clamp a floored grid coordinate to [0, n-1] before the int cast, NaN
+    to 0: the JVM's floor(double) → long (NaN → 0, ±inf and huge values
+    saturate) followed by the Column API's least/greatest."""
+    return np.clip(np.nan_to_num(raw, nan=0.0), 0, n - 1).astype(np.int64)
+
+
 def np_grid_x(lon: np.ndarray, level: int) -> np.ndarray:
     n = 1 << level
-    raw = np.floor((lon - LON_MIN) / LON_SPAN * float(n)).astype(np.int64)
-    return np.clip(raw, 0, n - 1)
+    return _np_clamp_index(np.floor((lon - LON_MIN) / LON_SPAN * float(n)), n)
 
 
 def np_grid_y(lat: np.ndarray, level: int) -> np.ndarray:
     n = 1 << level
-    raw = np.floor((lat - LAT_MIN) / LAT_SPAN * float(n)).astype(np.int64)
-    return np.clip(raw, 0, n - 1)
+    return _np_clamp_index(np.floor((lat - LAT_MIN) / LAT_SPAN * float(n)), n)
 
 
 def np_cell_id(lon: np.ndarray, lat: np.ndarray, level: int) -> np.ndarray:

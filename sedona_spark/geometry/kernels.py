@@ -149,12 +149,38 @@ def points_in_one_polygon(ring, px, py) -> np.ndarray:
     return out
 
 
-def _points_vs_row_rings_pip(rings, row_of_point, px, py) -> np.ndarray:
-    """Ternary PIP of many points against ONE ring PER ROW; points map to
-    rows via ``row_of_point``. Each ring is flattened ONCE — the
-    one-(ring, point)-per-row form replicates a V-vertex ring V times and
-    thrashes memory on high-vertex rings (measured 90 s → <1 s for 8 pairs
-    of 1,000-vertex rings)."""
+def row_ring_edges(rings):
+    """Edges of ONE ring per row, flattened once: ``(a, b, row_off,
+    row_len)`` with row ``r``'s edges at ``row_off[r] : row_off[r] +
+    row_len[r]`` of the endpoint arrays ``a``/``b``."""
+    coords, offsets, lengths = _flatten_rings(rings)
+    a, b, _ = _edges(coords, offsets, lengths)
+    return a, b, offsets, lengths
+
+
+def row_ringlist_edges(ring_lists):
+    """Edges of one MULTI-RING geometry per row (every ring with at least
+    one vertex; a row's rings are contiguous), in the ``(a, b, row_off,
+    row_len)`` form of :func:`row_ring_edges`."""
+    n = len(ring_lists)
+    rings, row_of_ring = _flatten_ring_lists(ring_lists)
+    keep = [i for i, r in enumerate(rings) if r.size >= 4]
+    coords, offsets, lengths = _flatten_rings([rings[i] for i in keep])
+    a, b, _ = _edges(coords, offsets, lengths)
+    row_len = np.zeros(n, dtype=np.int64)
+    np.add.at(row_len, row_of_ring[keep], lengths)
+    row_off = np.zeros(n, dtype=np.int64)
+    np.cumsum(row_len[:-1], out=row_off[1:])
+    return a, b, row_off, row_len
+
+
+def points_vs_row_edges_pip(edges, row_of_point, px, py) -> np.ndarray:
+    """Ternary PIP of many points against the edges of one row each
+    (``edges`` from :func:`row_ring_edges` / :func:`row_ringlist_edges`;
+    point ``i`` tests row ``row_of_point[i]``): even-odd crossing parity
+    over all of the row's edges, boundary = on any edge. Each point meets
+    only its row's edges, never a points × edges matrix."""
+    a, b, row_off, row_len = edges
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
     row_of_point = np.asarray(row_of_point, dtype=np.int64)
@@ -162,17 +188,12 @@ def _points_vs_row_rings_pip(rings, row_of_point, px, py) -> np.ndarray:
     out = np.zeros(m, dtype=np.int8)
     if m == 0:
         return out
-    coords, offsets, lengths = _flatten_rings(rings)
-    if coords.shape[0] == 0:
-        return out
-    a, b, _ = _edges(coords, offsets, lengths)
-    pair_counts = lengths[row_of_point]
+    pair_counts = row_len[row_of_point]
     total = int(pair_counts.sum())
     if total == 0:
         return out
     pt_of_pair = np.repeat(np.arange(m), pair_counts)
-    local = _local_index(pair_counts)
-    eidx = offsets[row_of_point][pt_of_pair] + local
+    eidx = row_off[row_of_point][pt_of_pair] + _local_index(pair_counts)
     ax, ay = a[eidx, 0], a[eidx, 1]
     bx, by = b[eidx, 0], b[eidx, 1]
     qx, qy = px[pt_of_pair], py[pt_of_pair]
@@ -199,6 +220,17 @@ def _points_vs_row_rings_pip(rings, row_of_point, px, py) -> np.ndarray:
     out[crossings % 2 == 1] = PIP_IN
     out[bnd] = PIP_BOUNDARY
     return out
+
+
+def _points_vs_row_rings_pip(rings, row_of_point, px, py) -> np.ndarray:
+    """Ternary PIP of many points against ONE ring PER ROW; points map to
+    rows via ``row_of_point``. Each ring is flattened ONCE — the
+    one-(ring, point)-per-row form replicates a V-vertex ring V times and
+    thrashes memory on high-vertex rings (measured 90 s → <1 s for 8 pairs
+    of 1,000-vertex rings)."""
+    if len(px) == 0:
+        return np.zeros(0, dtype=np.int8)
+    return points_vs_row_edges_pip(row_ring_edges(rings), row_of_point, px, py)
 
 
 def _pip_prefiltered(rings, env, row_of_point, px, py) -> np.ndarray:
@@ -365,74 +397,16 @@ def _points_vs_row_ringlists_pip(ring_lists, row_of_point, px, py) -> np.ndarray
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
     row_of_point = np.asarray(row_of_point, dtype=np.int64)
-    m = len(px)
-    out = np.zeros(m, dtype=np.int8)
-    if m == 0:
+    out = np.zeros(len(px), dtype=np.int8)
+    if len(px) == 0:
         return out
-    n = len(ring_lists)
-    rings, row_of_ring = _flatten_ring_lists(ring_lists)
-    keep = [i for i, r in enumerate(rings) if r.size >= 4]
-    if not keep:
-        return out
-    rings = [rings[i] for i in keep]
-    row_of_ring = row_of_ring[keep]
-    coords, offsets, lengths = _flatten_rings(rings)
-    a, b, _ = _edges(coords, offsets, lengths)
-    # per-row envelope over all of the row's rings (fmin/fmax absorb the
-    # NaN init), then prefilter the points
-    renv = ring_envelope(rings)
-    env = np.full((n, 4), np.nan)
-    np.fmin.at(env[:, 0], row_of_ring, renv[:, 0])
-    np.fmin.at(env[:, 1], row_of_ring, renv[:, 1])
-    np.fmax.at(env[:, 2], row_of_ring, renv[:, 2])
-    np.fmax.at(env[:, 3], row_of_ring, renv[:, 3])
-    e = env[row_of_point]
+    edges = row_ringlist_edges(ring_lists)
+    # rows without edges get a NaN envelope: every point fails the box
+    e = _group_env(edges[0], edges[1], edges[3])[row_of_point]
     inbox = (px >= e[:, 0]) & (px <= e[:, 2]) & (py >= e[:, 1]) & (py <= e[:, 3])
     sel = np.flatnonzero(inbox)
-    if len(sel) == 0:
-        return out
-    rop = row_of_point[sel]
-    spx, spy = px[sel], py[sel]
-    # edges are ring-contiguous and rings row-contiguous → row-contiguous
-    edges_per_row = np.zeros(n, dtype=np.int64)
-    np.add.at(edges_per_row, row_of_ring, lengths)
-    row_off = np.zeros(n, dtype=np.int64)
-    np.cumsum(edges_per_row[:-1], out=row_off[1:])
-    pair_counts = edges_per_row[rop]
-    total = int(pair_counts.sum())
-    if total == 0:
-        return out
-    mm = len(sel)
-    pt_of_pair = np.repeat(np.arange(mm), pair_counts)
-    local = _local_index(pair_counts)
-    eidx = row_off[rop][pt_of_pair] + local
-    ax, ay = a[eidx, 0], a[eidx, 1]
-    bx, by = b[eidx, 0], b[eidx, 1]
-    qx, qy = spx[pt_of_pair], spy[pt_of_pair]
-    cross = (bx - ax) * (qy - ay) - (by - ay) * (qx - ax)
-    on_seg = (
-        (cross == 0.0)
-        & (np.minimum(ax, bx) <= qx)
-        & (qx <= np.maximum(ax, bx))
-        & (np.minimum(ay, by) <= qy)
-        & (qy <= np.maximum(ay, by))
-    )
-    straddles = (ay > qy) != (by > qy)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        x_at = ax + (bx - ax) * (qy - ay) / (by - ay)
-    crossing = straddles & (qx < x_at)
-    pt_off = np.zeros(mm, dtype=np.int64)
-    np.cumsum(pair_counts[:-1], out=pt_off[1:])
-    valid = pair_counts > 0
-    vo = pt_off[valid]
-    crossings = np.zeros(mm, dtype=np.int64)
-    bnd = np.zeros(mm, dtype=bool)
-    crossings[valid] = np.add.reduceat(crossing.astype(np.int64), vo)
-    bnd[valid] = np.add.reduceat(on_seg.astype(np.int64), vo) > 0
-    sub = np.zeros(mm, dtype=np.int8)
-    sub[crossings % 2 == 1] = PIP_IN
-    sub[bnd] = PIP_BOUNDARY
-    out[sel] = sub
+    if len(sel):
+        out[sel] = points_vs_row_edges_pip(edges, row_of_point[sel], px[sel], py[sel])
     return out
 
 

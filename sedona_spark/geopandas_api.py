@@ -185,11 +185,17 @@ class GeoDataFrame:
         """Point-in-polygon spatial join (geopandas ``sjoin`` spelling
         over the engine's ``pip_join``): self is the point side
         (``point_x``/``point_y`` columns), ``polys`` carries the packed
-        ``ring`` column. geopandas' within/intersects/contains all
-        collapse to the covers test for the point-in-polygon case."""
+        ``ring`` column. ``within`` is the polygon interior
+        (``pip_join`` 'contains'), ``intersects`` counts the boundary
+        ('intersects'), and ``contains`` — a point containing a polygon
+        with area — matches nothing: the same columns, no rows."""
         if predicate not in ("within", "intersects", "contains"):
             raise ValueError(f"unsupported predicate {predicate!r}")
         from sedona_spark.operators.spatial_join import pip_join
 
+        points = self.df
+        if predicate == "contains":
+            points, polys = points.limit(0), polys.limit(0)
+        how = "contains" if predicate == "within" else "intersects"
         return pip_join(
-            self.df, polys, x=point_x, y=point_y, ring=ring, **kw)
+            points, polys, how, x=point_x, y=point_y, ring=ring, **kw)

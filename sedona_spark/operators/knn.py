@@ -26,6 +26,23 @@ bounded heap"):
 The loop is driver-side control flow over DataFrame ops (a count per round)
 — no data ever collects to the driver, so it holds at 10^12 rows; rounds are
 O(log grid) worst case and 1-2 in practice when ``level`` fits the density.
+
+Two plans, picked by ONE rule — Spark's broadcast size rule applied to the
+object side (:func:`broadcast_index.indexable`: a batch side whose
+optimizer estimate is at most ``spark.sql.autoBroadcastJoinThreshold``;
+``-1`` turns it off):
+
+* broadcast index (rule holds, ``metric='euclid'``, double coordinates):
+  the objects are collected once through Arrow, sorted by the tie-break
+  columns and indexed by cell at ``level``; the queries stream through ONE
+  ``mapInArrow`` that runs the rounds above inside the task, with the same
+  first ring, growth and bound — no Spark job per round, no shuffle, no
+  window (:func:`broadcast_index.knn_join`, also behind
+  :func:`knn_join_obj_broadcast`);
+* rounds (large object sides, inputs without a size estimate, geodesic
+  metrics): the Spark loop above.
+
+Both return the same rows, columns and types.
 """
 
 from __future__ import annotations
@@ -34,9 +51,11 @@ import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 
 from sedona_spark import cells
 from sedona_spark.functions import st
+from sedona_spark.operators import broadcast_index
 from sedona_spark.functions.st_measures import (
     _EARTH_RADIUS_M,
     _WGS84_A,
@@ -46,6 +65,8 @@ from sedona_spark.functions.st_measures import (
 )
 
 _RAD = math.pi / 180.0
+# queries per distance block in knn_join_broadcast's object-batch scan
+_QUERY_CHUNK = 256
 
 
 def knn_query(
@@ -169,37 +190,44 @@ def knn_join_broadcast(
         + [f"{dcol} double"]
     )
 
+    chunk = _QUERY_CHUNK
+
     def gen(batches):
         for b in batches:
             ox = b[obj_x].to_numpy(dtype=np.float64)
             oy = b[obj_y].to_numpy(dtype=np.float64)
-            if metric == "sphere":
-                rad = _RAD
-                dlat = (oy[None, :] - q_xy[:, 1:2]) * rad
-                dlon = (ox[None, :] - q_xy[:, 0:1]) * rad
-                a = (
-                    np.sin(dlat / 2) ** 2
-                    + np.cos(q_xy[:, 1:2] * rad)
-                    * np.cos(oy[None, :] * rad)
-                    * np.sin(dlon / 2) ** 2
-                )
-                d = 2.0 * _EARTH_RADIUS_M * np.arcsin(np.sqrt(a))
-            else:
-                d = (ox[None, :] - q_xy[:, 0:1]) ** 2 + (
-                    oy[None, :] - q_xy[:, 1:2]
-                ) ** 2
-            # keep EVERY row at distance <= the local kth value (not an
-            # arbitrary argpartition cut): candidates tied at the kth
-            # distance must all survive so the deterministic global window
-            # — ordered by (distance, object columns) — picks the winners
-            kk = min(k, d.shape[1])
-            kth = np.partition(d, kk - 1, axis=1)[:, kk - 1 : kk]
-            qi, oi = np.nonzero(d <= kth)
-            rows = {query_id: np.asarray(q_ids)[qi]}
-            for c in obj_cols:
-                rows[c] = b[c].to_numpy()[oi]
-            rows[dcol] = d[qi, oi]
-            yield pd.DataFrame(rows)
+            kk = min(k, len(ox))
+            # queries in fixed-size chunks: a chunk × batch distance block
+            # per step, never all queries × the batch
+            for s in range(0, len(q_xy), chunk):
+                qc = q_xy[s:s + chunk]
+                if metric == "sphere":
+                    rad = _RAD
+                    dlat = (oy[None, :] - qc[:, 1:2]) * rad
+                    dlon = (ox[None, :] - qc[:, 0:1]) * rad
+                    a = (
+                        np.sin(dlat / 2) ** 2
+                        + np.cos(qc[:, 1:2] * rad)
+                        * np.cos(oy[None, :] * rad)
+                        * np.sin(dlon / 2) ** 2
+                    )
+                    d = 2.0 * _EARTH_RADIUS_M * np.arcsin(np.sqrt(a))
+                else:
+                    d = (ox[None, :] - qc[:, 0:1]) ** 2 + (
+                        oy[None, :] - qc[:, 1:2]
+                    ) ** 2
+                # keep EVERY row at distance <= the local kth value (not an
+                # arbitrary argpartition cut): candidates tied at the kth
+                # distance must all survive so the deterministic global
+                # window — ordered by (distance, object columns) — picks
+                # the winners
+                kth = np.partition(d, kk - 1, axis=1)[:, kk - 1 : kk]
+                qi, oi = np.nonzero(d <= kth)
+                rows = {query_id: np.asarray(q_ids)[qi + s]}
+                for c in obj_cols:
+                    rows[c] = b[c].to_numpy()[oi]
+                rows[dcol] = d[qi, oi]
+                yield pd.DataFrame(rows)
 
     cand = objects.mapInPandas(gen, schema=out_schema)
     order_cols = [c for c in obj_cols if c not in (obj_x, obj_y)]
@@ -225,76 +253,27 @@ def knn_join_obj_broadcast(
     max_object_rows: int = 2_000_000,
 ) -> DataFrame:
     """Broadcast-OBJECT-side kNN join (``BroadcastObjectSideKNNJoinExec``):
-    the symmetric case — a small object table against a huge query stream.
-    The object table is collected once (size-guarded like the reference's
-    ``autoBroadcastJoinThreshold`` gate), pre-sorted by the deterministic
-    tie-break columns, and shipped as numpy arrays into a single
-    ``mapInPandas`` over the query side: per batch one vectorized distance
-    matrix + a STABLE argsort, so equal distances resolve by the pre-sorted
-    object order — identical output contract to ``knn_join``
-    (row_number semantics). Zero shuffle; the query side streams through.
-    """
-    import numpy as np
-    import pandas as pd
-
-    obj_cols = objects.columns
-    order_cols = [c for c in obj_cols if c not in (obj_x, obj_y)]
-    osorted = objects.orderBy(*[F.col(c).asc() for c in order_cols])
-    orows = osorted.limit(max_object_rows + 1).collect()
-    if len(orows) > max_object_rows:
+    a small object table against a huge query stream, whatever its size
+    estimate — the index path :func:`knn_join` takes by Spark's broadcast
+    rule (:func:`broadcast_index.knn_join`, at the default ``level``). The
+    object table is collected once through Arrow (at most
+    ``max_object_rows``, else ``ValueError``), indexed on the driver, and
+    the queries stream through one ``mapInArrow``: zero shuffle, the same
+    output as ``knn_join`` (row_number ties by the object columns).
+    ``metric='sphere'`` ranks every object by haversine meters
+    (``dist_m``). Each query row is ranked on its own, so ``query_id`` is
+    not read."""
+    ot = objects.limit(max_object_rows + 1).toArrow()
+    if ot.num_rows > max_object_rows:
         raise ValueError(
             f"knn_join_obj_broadcast: object side exceeds max_object_rows="
             f"{max_object_rows}; use knn_join (k-ring path) or raise the limit"
         )
-    if not orows:
+    if not ot.num_rows:
         raise ValueError("knn_join_obj_broadcast requires a non-empty object side")
-    o_xy = np.array([[float(r[obj_x]), float(r[obj_y])] for r in orows])
-    o_vals = {c: np.array([r[c] for r in orows]) for c in obj_cols}
-    kk = min(k, len(orows))
-    dcol = "dist_m" if metric == "sphere" else "dist_sq"
-
-    q_schema = queries.schema
-    qcols = queries.columns
-    out_schema = ", ".join(
-        [f"`{c}` {q_schema[c].dataType.simpleString()}" for c in qcols]
-        + [f"`{c}` {objects.schema[c].dataType.simpleString()}" for c in obj_cols]
-        + [f"{dcol} double", "knn_rank int"]
-    )
-
-    def gen(batches):
-        for b in batches:
-            bx = b[qx].to_numpy(dtype=np.float64)
-            by = b[qy].to_numpy(dtype=np.float64)
-            if metric == "sphere":
-                rad = _RAD
-                dlat = (o_xy[None, :, 1] - by[:, None]) * rad
-                dlon = (o_xy[None, :, 0] - bx[:, None]) * rad
-                a = (
-                    np.sin(dlat / 2) ** 2
-                    + np.cos(by[:, None] * rad)
-                    * np.cos(o_xy[None, :, 1] * rad)
-                    * np.sin(dlon / 2) ** 2
-                )
-                d = 2.0 * _EARTH_RADIUS_M * np.arcsin(np.sqrt(a))
-            else:
-                d = (o_xy[None, :, 0] - bx[:, None]) ** 2 + (
-                    o_xy[None, :, 1] - by[:, None]
-                ) ** 2
-            # stable sort on a pre-(order_cols)-sorted object array = exact
-            # (distance, object order) ranking with no per-row python
-            idx = np.argsort(d, axis=1, kind="stable")[:, :kk]
-            flat = idx.ravel()
-            nq = len(bx)
-            rows = {}
-            for c in qcols:
-                rows[c] = np.repeat(b[c].to_numpy(), kk)
-            for c in obj_cols:
-                rows[c] = o_vals[c][flat]
-            rows[dcol] = np.take_along_axis(d, idx, axis=1).ravel()
-            rows["knn_rank"] = np.tile(np.arange(1, kk + 1, dtype=np.int32), nq)
-            yield pd.DataFrame(rows)
-
-    return queries.mapInPandas(gen, schema=out_schema)
+    return broadcast_index.knn_join(
+        queries, objects, k, level=7, qx=qx, qy=qy, obj_x=obj_x, obj_y=obj_y,
+        metric=metric, table=ot)
 
 
 def knn_join(
@@ -335,6 +314,15 @@ def knn_join(
     covers the half-circumference only the latitude bound applies. Near
     the poles cos(φ_max) → 0 and resolution falls back to the latitude
     bound — conservative, never wrong."""
+    if (
+        metric == "euclid"
+        and all(isinstance(df.schema[c].dataType, DoubleType)
+                for df, c in ((queries, qx), (queries, qy), (objects, obj_x), (objects, obj_y)))
+        and broadcast_index.indexable(objects)
+    ):
+        return broadcast_index.knn_join(
+            queries, objects, k, level, qx, qy, obj_x, obj_y,
+            include_ties, initial_ring, max_rounds, exclude_pair)
     obj_order = [c for c in objects.columns if c not in (obj_x, obj_y)]
     qcols = queries.columns
     # Geodesic metrics probe much wider disks (the longitude ring scales
@@ -370,9 +358,7 @@ def knn_join(
     # queries resolve in round 1 (each extra round costs one checkpoint job
     # + a count job). Uses the count we already ran — no extra job, no
     # correctness impact (the completeness bound is unchanged).
-    exp_per_cell = max(n_obj / float(n_side * n_side), 1e-9)
-    ring0 = int(math.ceil((math.sqrt(4.0 * k / exp_per_cell) - 1.0) / 2.0))
-    ring0 = max(max(1, int(initial_ring)), min(ring0, n_side))
+    ring0 = broadcast_index.first_ring(n_obj, k, level, initial_ring)
     if geodesic:
         # high-latitude queries need a wider LONGITUDE disk before the
         # x-bound (∝ cos φ) can certify the kth distance: scale the initial

@@ -34,10 +34,25 @@ Every join here is one of two candidate skeletons plus its refine:
   polygon-overlap and ``overlay.rect_overlay_area`` joins differ only in
   their refine.
 
-Scale notes (100 TB posture): both inputs shuffle once, on an int64 key;
-the zone side is usually small → Catalyst auto-broadcasts it, removing the
-big side's shuffle entirely. No sampling, no driver-side tree build — layout
-is closed-form from ``level``, which also makes checkpoint/resume sound.
+Scale notes (100 TB posture): the ring and multi-ring point × zone joins
+have two plans, picked by ONE rule — Spark's broadcast size rule applied
+to the zone side (:func:`broadcast_index.indexable`: a batch side whose
+optimizer estimate is at most ``spark.sql.autoBroadcastJoinThreshold``;
+``-1`` turns it off):
+
+* broadcast index (rule holds): the zones are collected once through
+  Arrow and indexed by cover cell on the driver; the points stream
+  through ONE ``mapInArrow`` that looks up candidates and refines them —
+  no explode, no shuffle, no ring per candidate
+  (:func:`broadcast_index.pip_join`);
+* cell join (large zone sides, inputs without a size estimate, streaming
+  zone sides): both inputs shuffle once, on an int64 key, or Catalyst
+  broadcasts the cover.
+
+Both return the same rows and columns. The rectangle, semi/anti/outer and
+envelope × envelope joins always take the cell join. No sampling, no
+driver-side tree build — layout is closed-form from ``level`` (the index
+grain of both plans), which also makes checkpoint/resume sound.
 """
 
 from __future__ import annotations
@@ -47,6 +62,7 @@ from pyspark.sql import functions as F
 
 from sedona_spark import cells
 from sedona_spark.functions import st
+from sedona_spark.operators import broadcast_index
 
 _ENV = ("xmin", "ymin", "xmax", "ymax")
 _L_ENV = ("_lxmin", "_lymin", "_lxmax", "_lymax")
@@ -87,15 +103,25 @@ def with_envelope(df: DataFrame, ring: str = "ring") -> DataFrame:
 
 
 def _pip_join(
-    points: DataFrame, zones: DataFrame, env_geom: Column, cls: Column,
+    points: DataFrame, zones: DataFrame, geom: str, multi: bool,
     predicate: str, level: int, x: str, y: str,
 ) -> DataFrame:
-    """Point × zone skeleton: home cell ⋈ envelope cover, envelope
-    prefilter (cheap, codegen'd), then the exact PIP class ``cls``
-    (0 out, 1 boundary, 2 interior)."""
-    keep = cls >= 1 if _boundary_counts(predicate) else cls == 2
+    """Point × zone skeleton over ``geom`` (a packed ring, or with
+    ``multi`` a ring list). A zone side that fits Spark's broadcast rule is
+    indexed once and the points stream past it
+    (:func:`broadcast_index.pip_join`); otherwise home cell ⋈ envelope
+    cover, envelope prefilter (cheap, codegen'd), then the exact PIP class
+    (0 out, 1 boundary, 2 interior). Both plans return the same rows."""
+    boundary = _boundary_counts(predicate)
+    indexed = broadcast_index.indexable(zones)
     if "xmin" not in zones.columns:
+        env_geom = F.flatten(F.col(geom)) if multi else F.col(geom)
         zones = zones.select("*", *st.st_envelope_cols(env_geom))
+    if indexed:
+        return broadcast_index.pip_join(points, zones, geom, multi, boundary, level, x, y)
+    classify = st.pip_class_multi if multi else st.pip_class
+    cls = classify(F.col(geom), F.col(x), F.col(y))
+    keep = cls >= 1 if boundary else cls == 2
     pc = points.withColumn("cell", cells.cell_id(F.col(x), F.col(y), level))
     j = pc.join(_explode_cover(zones, level), "cell")
     j = j.filter(
@@ -123,10 +149,7 @@ def pip_join(
     (boundary counts) — reference boundary split,
     ``SpatialPredicateEvaluators.java:25-80``.
     """
-    return _pip_join(
-        points, zones, F.col(ring), st.pip_class(F.col(ring), F.col(x), F.col(y)),
-        predicate, level, x, y,
-    )
+    return _pip_join(points, zones, ring, False, predicate, level, x, y)
 
 
 def pip_join_multi(
@@ -140,14 +163,9 @@ def pip_join_multi(
 ) -> DataFrame:
     """PIP join against MULTI-RING geometries (polygons with holes,
     MultiPolygon): ``geom`` is ``array<array<double>>`` of packed rings,
-    even-odd semantics. Same plan shape as :func:`pip_join` — cell
-    equi-join + envelope prefilter + ONE Arrow-batched refine; the envelope
-    is the min/max over all rings (flatten, pure SQL)."""
-    return _pip_join(
-        points, zones, F.flatten(F.col(geom)),
-        st.pip_class_multi(F.col(geom), F.col(x), F.col(y)),
-        predicate, level, x, y,
-    )
+    even-odd semantics. Same plans as :func:`pip_join`; the envelope is
+    the min/max over all rings (flatten, pure SQL)."""
+    return _pip_join(points, zones, geom, True, predicate, level, x, y)
 
 
 def pip_join_rect(

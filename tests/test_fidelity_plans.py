@@ -103,10 +103,21 @@ def test_multi_ring_join_plan_broadcasts_zones(spark):
 
     pts = points_from_events(spark, SF)
     zones = holed_zones_from_nation(spark, SF)
+    # the small zone side is broadcast as an index: the points stream
+    # through one Arrow pass (lookup + even-odd refine), never shuffled
     plan = _plan(pip_join_multi(pts, zones, level=6))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # exactly ONE Arrow refine stage (the even-odd kernel)
+    assert "MapInArrow" in plan
+    assert "Exchange" not in plan and "SortMergeJoin" not in plan
+    assert "ArrowEvalPython" not in plan
+    # with broadcasting off, the cell plan keeps exactly ONE Arrow refine
+    # stage (the even-odd kernel)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = _plan(pip_join_multi(pts, zones, level=6))
+    finally:
+        spark.conf.set(key, old)
     assert plan.count("ArrowEvalPython") == 1
 
 

@@ -1401,7 +1401,8 @@ def test_geopandas_api_surface(spark):
     simp = {r["id"]: r["area"] for r in gs.simplify(0.01).area.collect()}
     assert simp == area
 
-    # sjoin == pip_join, row for row
+    # sjoin within == pip_join contains, intersects == pip_join covers,
+    # row for row (lattice points on the square edges tell them apart)
     zones = gs.df.select(F.col("id").alias("zone_id"),
                          F.col("geom").alias("ring"))
     many = spark.range(100).select(
@@ -1409,12 +1410,42 @@ def test_geopandas_api_surface(spark):
         (F.col("id") % 15).cast("double").alias("x"),
         (F.col("id") % 17).cast("double").alias("y"))
     gdf = GeoDataFrame(many, index="pid")
-    a = sorted((r["pid"], r["zone_id"])
-               for r in gdf.sjoin(zones).select("pid", "zone_id").collect())
-    bj = sorted((r["pid"], r["zone_id"])
-                for r in pip_join(many, zones)
-                .select("pid", "zone_id").collect())
-    assert a == bj and len(a) > 0
+
+    def pairs(df):
+        return sorted((r["pid"], r["zone_id"])
+                      for r in df.select("pid", "zone_id").collect())
+
+    a = pairs(gdf.sjoin(zones))
+    assert a == pairs(pip_join(many, zones, "contains")) and len(a) > 0
+    i = pairs(gdf.sjoin(zones, predicate="intersects"))
+    assert i == pairs(pip_join(many, zones)) and len(i) > len(a)
+
+
+@pytest.mark.parametrize("threshold", ["10485760b", "-1"])
+def test_geopandas_sjoin_predicates(spark, threshold):
+    """Each sjoin predicate keeps its geopandas meaning: a point on the
+    unit square's edge is not within it but intersects it, and no point
+    contains a polygon with area (same columns, no rows). The pandas-built
+    zone side has a size estimate, so the default threshold takes the
+    broadcast index path and -1 the cell path."""
+    import pandas as pd
+
+    from sedona_spark.geopandas_api import GeoDataFrame
+
+    pts = spark.createDataFrame([(0, 0.0, 0.5), (1, 0.5, 0.5)], "id long, x double, y double")
+    square = spark.createDataFrame(pd.DataFrame(
+        {"zone_id": [7], "ring": [[0.0, 0.0, 1.0, 0.0, 1.0, 1.0, 0.0, 1.0]]}))
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    try:
+        gdf = GeoDataFrame(pts)
+        got = {p: sorted(r["id"] for r in gdf.sjoin(square, p).collect())
+               for p in ("within", "intersects", "contains")}
+        cols = gdf.sjoin(square, "contains").columns
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert got == {"within": [1], "intersects": [0, 1], "contains": []}
+    assert cols == ["id", "x", "y", "zone_id", "ring"]
 
 
 def test_stats_parity_shims(spark):

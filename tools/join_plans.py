@@ -13,6 +13,14 @@ sorted rows]}). Run it once on each of two checkouts with the same
 every result. The ops named after the ``spatial_joins`` benchmark ops
 (``pip_poly``, ``pip_holes``, ``pip_rect``, ``distance``, ``knn``) use its
 call signatures; ``knn``'s plan is one round's disk join.
+
+Every op runs at the session's ``spark.sql.autoBroadcastJoinThreshold``,
+where ``pip_poly``, ``pip_holes`` and ``knn_join`` take the broadcast index
+path. Those three run again with the threshold at ``-1`` (the cell join and
+the kNN rounds) as ``<op>_cell``: their plans differ by design, their
+result digests must be equal. A plan that reads a kNN round checkpoint is
+not written (``knn_join_cell``, ``knn_join_sphere``): it names the run's
+checkpoint RDD.
 """
 import hashlib
 import json
@@ -130,18 +138,31 @@ def ops(spark, paths: dict) -> dict:
     }
 
 
+# ops that take the broadcast index path at the default threshold
+BOTH_PATHS = ("pip_poly", "pip_holes", "knn_join")
+# ops whose plan reads a kNN round checkpoint
+ROUNDS = ("knn_join_sphere", "knn_join_cell")
+
+
+def record(out_dir: str, tag: str, name: str, df, results: dict) -> None:
+    if name not in ROUNDS:
+        with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
+            f.write(normalized_plan(df) + "\n")
+    results[name] = digest(df)
+    print(name, *results[name], flush=True)
+
+
 def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("join_plans", cpus=2, shuffle_partitions=8)
     paths = write_inputs(os.path.join(out_dir, "inputs"))
     results = {}
-    for name, build in ops(spark, paths).items():
-        df = build()
-        if not name.startswith("knn_join"):  # knn_join's plan reads a checkpoint
-            with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
-                f.write(normalized_plan(df) + "\n")
-        results[name] = digest(df)
-        print(name, *results[name], flush=True)
+    builds = ops(spark, paths)
+    for name, build in builds.items():
+        record(out_dir, tag, name, build(), results)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    for name in BOTH_PATHS:
+        record(out_dir, tag, f"{name}_cell", builds[name](), results)
     with open(os.path.join(out_dir, f"results_{tag}.json"), "w") as f:
         json.dump(results, f, indent=1, sort_keys=True)
     spark.stop()
