@@ -970,10 +970,10 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERING (r5): connected components over a pair graph +
     representative selection — the stage that turns pairwise dup evidence
     into "keep one per cluster". Runs the REAL pointer-jumping operator
-    (``dedup.connected_components``: min-label + label-of-label each
-    round, localCheckpoint per round) on a planted graph over the
-    documents ids whose components have a CLOSED FORM the DuckDB oracle
-    computes directly:
+    (``dedup.connected_components``: min-label offers with a hook, then
+    label-of-label jumps each round, checkpoint per round) on a planted
+    graph over the documents ids whose components have a CLOSED FORM the
+    DuckDB oracle computes directly:
 
     * chain edges (i, i+1) for i % 10 != 9 → blocks of 10;
     * bridge edges (i, i+10) for i % 50 == 5 → merges block pairs
@@ -1065,8 +1065,7 @@ def q_simhash_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     4×15-bit pigeonhole blocking — fully mirrored in DuckDB."""
     from sedona_spark.pipeline.dedup import simhash_near_dup_pairs_portable
 
-    out = simhash_near_dup_pairs_portable(_spread_docs(spark, sf_dir), max_hamming=3)
-    return out.select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
+    return simhash_near_dup_pairs_portable(_spread_docs(spark, sf_dir), max_hamming=3)
 
 
 def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -49,7 +49,7 @@ def local_outlier_factor(
                  query_id="_qid", qx="_qx", qy="_qy", obj_x="_ox", obj_y="_oy",
                  exclude_pair=("_qid", "_oid"))
         .select("_qid", "_oid", F.sqrt(F.col("dist_sq")).alias("_d"))
-    ).persist()
+    )
 
     kdist = knn.groupBy("_qid").agg(F.max("_d").alias("_kdist"))
 
@@ -75,4 +75,10 @@ def local_outlier_factor(
             )
         )
     )
-    return lof.withColumnRenamed("_qid", id_col)
+    # knn feeds k-distance, reachability and the LOF ratio: cache it for
+    # the one action that materializes the result, then release it
+    knn.persist()
+    try:
+        return lof.withColumnRenamed("_qid", id_col).localCheckpoint(eager=True)
+    finally:
+        knn.unpersist()

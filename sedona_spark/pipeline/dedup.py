@@ -70,21 +70,30 @@ def minhash_signatures(
             for i in range(num_hashes)
         ]
         return docs.select(F.col(id_col), F.array(*mins).alias("sig"))
-    # hash each shingle STRING once, then derive the per-function values by
-    # rehashing the resulting int64 — 1 string hash + num_hashes long hashes
-    # per shingle. Shape: EXPLODE the shingle hashes and take num_hashes
-    # MIN aggregates — partial aggregation keeps state at num_hashes longs
-    # per doc map-side, and no per-row arrays are materialized (the
-    # array_min(transform(...)) formulation allocates num_hashes arrays per
-    # document and is GC-bound)
-    base = F.transform(sh, lambda s: F.xxhash64(s))
-    ex = docs.select(F.col(id_col), F.explode(base).alias("_h"))
+    return _minhash_sigs(
+        docs, id_col, F.transform(sh, lambda s: F.xxhash64(s)), num_hashes
+    )
+
+
+def _minhash_sigs(
+    df: DataFrame, id_col: str, hashes: Column, num_hashes: int
+) -> DataFrame:
+    """→ (id, sig) from ``hashes``, an ``array<long>`` of xxhash64'd
+    shingles: value i is ``min(xxhash64(h, i))`` over the array.
+
+    Each shingle STRING is hashed once and the per-function values are
+    derived by rehashing the int64 — 1 string hash + num_hashes long
+    hashes per shingle. Shape: EXPLODE the shingle hashes and take
+    num_hashes MIN aggregates — partial aggregation keeps state at
+    num_hashes longs per doc map-side, and no per-row arrays are
+    materialized (the array_min(transform(...)) formulation allocates
+    num_hashes arrays per document and is GC-bound)."""
+    ex = df.select(F.col(id_col), F.explode(hashes).alias("_h"))
     aggs = [
         F.min(F.xxhash64(F.col("_h"), F.lit(i))).alias(f"_mh_{i}")
         for i in range(num_hashes)
     ]
-    per = ex.groupBy(id_col).agg(*aggs)
-    return per.select(
+    return ex.groupBy(id_col).agg(*aggs).select(
         F.col(id_col),
         F.array(*[F.col(f"_mh_{i}") for i in range(num_hashes)]).alias("sig"),
     )
@@ -216,15 +225,7 @@ def minhash_dedup_pairs(
         )
     sh = F.transform(char_shingles(F.col(text), shingle), lambda s: F.xxhash64(s))
     hashed = docs.select(F.col(id_col), sh.alias("shingles")).localCheckpoint(eager=True)
-    ex = hashed.select(F.col(id_col), F.explode("shingles").alias("_h"))
-    aggs = [
-        F.min(F.xxhash64(F.col("_h"), F.lit(i))).alias(f"_mh_{i}")
-        for i in range(num_hashes)
-    ]
-    sigs = ex.groupBy(id_col).agg(*aggs).select(
-        F.col(id_col),
-        F.array(*[F.col(f"_mh_{i}") for i in range(num_hashes)]).alias("sig"),
-    )
+    sigs = _minhash_sigs(hashed, id_col, F.col("shingles"), num_hashes)
     cands = lsh_candidate_pairs(sigs, bands, id_col, num_hashes=num_hashes)
     # Verify = the wall at scale when pairs drag their shingle arrays
     # through two join exchanges (candidates ≫ true pairs by ~1000×).
@@ -311,44 +312,13 @@ def simhash64(text: Column) -> Column:
 def simhash_near_dup_pairs(
     docs: DataFrame, max_hamming: int = 3, text: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Block on 4×16-bit SimHash chunks (any pair within hamming ≤ 3 of a
-    64-bit hash shares at least one exact 16-bit quarter — pigeonhole), then
-    verify exact hamming distance. Classic scalable SimHash join."""
+    """SimHash near-dup pairs ``(id_a, id_b, hamming)``: the 64-bit
+    :func:`simhash64` through :func:`hamming_near_dup_pairs`, whose
+    ``max_hamming + 1`` pigeonhole bands (4×16 bits at the default 3)
+    find EVERY pair within ``max_hamming`` bits. Classic scalable SimHash
+    join."""
     with_h = docs.select(F.col(id_col), simhash64(F.col(text)).alias("sh"))
-    chunks = with_h.select(
-        id_col,
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftrightunsigned(F.col("sh"), 16 * c)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("ck"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("c"),
-    ).select(id_col, "sh", "c.chunk", "c.ck")
-    # pin the self-join's parallelism (same rationale as
-    # lsh_candidate_pairs: bytes-tiny input exchange, quadratic-in-bucket
-    # join output that AQE-coalesced tasks would serialize)
-    chunks = chunks.repartition(
-        int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        "chunk", "ck")
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    ham = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh")))
-    return (
-        a.join(b, ["chunk", "ck"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"), ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return hamming_near_dup_pairs(with_h, "sh", id_col, max_hamming, n_bits=64)
 
 
 def simhash_portable(
@@ -383,39 +353,12 @@ def simhash_portable(
 def simhash_near_dup_pairs_portable(
     docs: DataFrame, max_hamming: int = 3, text: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Portable SimHash near-dup: 4×15-bit pigeonhole blocking (any pair
-    within hamming ≤ 3 of a 60-bit hash shares an exact 15-bit quarter),
-    exact hamming verify — fully mirrorable in DuckDB."""
-    with_h = simhash_portable(docs, 60, text, id_col)
-    chunks = with_h.select(
-        id_col,
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftrightunsigned(F.col("sh"), 15 * c)
-                        .bitwiseAND(F.lit(0x7FFF))
-                        .alias("ck"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("c"),
-    ).select(id_col, "sh", "c.chunk", "c.ck")
-    # alias self-join: one computation of the SimHash pipeline (it contains
-    # the vectorized UDF) + ReusedExchange for the other side
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    ham = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh")))
-    return (
-        a.join(b, ["chunk", "ck"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"), ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+    """Portable SimHash near-dup pairs: the 60-bit :func:`simhash_portable`
+    through :func:`hamming_near_dup_pairs` (4×15-bit bands at the default
+    3, complete at any ``max_hamming``) — fully mirrorable in DuckDB."""
+    return hamming_near_dup_pairs(
+        simhash_portable(docs, 60, text, id_col), "sh", id_col, max_hamming,
+        n_bits=60,
     )
 
 
@@ -481,9 +424,9 @@ def hamming_near_dup_pairs(
     the only cost knob (narrower bands = hotter buckets; pick
     ``max_hamming`` so bands stay ≥ 8 bits at your cardinality).
 
-    This is the image-dedup path of the input contract's ``phash:int64``
-    column (see :func:`phash_near_dup_pairs`) and works unchanged for
-    any 64-bit fingerprint."""
+    This is the one banded Hamming self-join: the image-dedup path of the
+    input contract's ``phash:int64`` column (see
+    :func:`phash_near_dup_pairs`) and both SimHash pair joins call it."""
     nb = int(max_hamming) + 1
     width = (int(n_bits) + nb - 1) // nb
     mask = (1 << width) - 1
@@ -539,6 +482,32 @@ def phash_near_dup_pairs(
 # ---------------------------------------------------------------------------
 
 
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """Eager ``localCheckpoint`` over a plan that carries no size estimate.
+
+    A checkpoint keeps the optimizer estimate of the plan it cut, and a
+    join estimates the PRODUCT of its children, so a loop that joins its
+    own checkpoints doubles the estimate's digit count every round
+    (10^6 after one components round, 10^1,148,609 after 17, with each
+    round's planning slowing in step). Rebuilt over the checkpointed
+    rows, the frame estimates at the session default like any other
+    RDD-backed frame."""
+    cp = df.localCheckpoint(eager=True)
+    spark = df.sparkSession
+    jdf = spark._jsparkSession.internalCreateDataFrame(
+        cp._jdf.queryExecution().logical().rdd(), cp._jdf.schema(), False
+    )
+    return DataFrame(jdf, spark)
+
+
+def _release(cp: DataFrame) -> None:
+    """Drop the blocks of a :func:`_checkpoint` frame (through the
+    context: ``RDD.unpersist`` logs a warning for every locally
+    checkpointed RDD, i.e. once per round)."""
+    rdd_id = cp._jdf.queryExecution().logical().rdd().id()
+    cp.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -548,75 +517,91 @@ def connected_components(
     """Connected components of the near-dup pair graph → ``(id,
     component)`` with component = the MIN member id — the stage that turns
     pairwise dup evidence into dedup GROUPS (the reference ships the pair
-    tier; grouping is what a corpus dedup actually applies).
+    tier; grouping is what a corpus dedup actually applies). Ids are cast
+    to long. This is the one components loop: ``operators/dbscan.py``
+    clusters its core points with it.
 
-    Algorithm: min-label propagation with POINTER JUMPING (the
-    Shiloach–Vishkin contraction idea, public): each round does
+    Algorithm: min-label propagation with hooking and POINTER JUMPING
+    (the Shiloach–Vishkin contraction ideas, public); labels are member
+    ids, never above the node's own. Each round does
 
-    1. neighbor step — ``l(v) ← min(l(v), min_{u∈N(v)} l(u))`` (one
-       shuffle: edges⋈labels then groupBy node), and
-    2. pointer jump — ``l(v) ← l(l(v))`` (labels self-join), which halves
-       the remaining chain depth,
+    1. offers — every edge (u, v) offers ``l(u)`` to v (neighbor step)
+       and to ``l(v)`` (hook: the whole tree behind that label adopts
+       it); each node keeps the minimum offer, and
+    2. two pointer jumps ``l(v) ← l(l(v))``, each halving chain depth,
 
-    so rounds ≈ log₂(diameter), not diameter — a 1M-doc boilerplate chain
-    converges in ~20 rounds instead of 1M. Each round ends in an EAGER
-    ``localCheckpoint`` (plan reset: the loop's lineage would otherwise
-    grow quadratically — same discipline as the exact kNN loop), and the
-    convergence test (count of changed labels over the checkpointed
-    result) runs every OTHER round: labels are monotone non-increasing,
-    so an extra round past the fixpoint recomputes identical labels and
-    halving the convergence probes trades one cheap round for one
-    driver-blocking job per probe. Scale shape: state is one (id, label)
-    row per node; every step is an equi-join/groupBy on the id —
-    AQE-skew-safe, no broadcast of anything unbounded."""
+    so rounds grow with log(diameter) in any id order: a 65,536-node chain
+    reaches its fixpoint in 8 rounds, or 9 with shuffled ids, where one
+    jump without the hook needs over 200 (hashed ids are shuffled order).
+    Each round ends in an eager :func:`_checkpoint` (plan reset, bounded
+    size estimate; the previous round's blocks are dropped). The
+    convergence probe (no label changed) runs every OTHER round: labels
+    only fall, so a round past the fixpoint is pure recomputation, and
+    each probe is a driver-blocking job. Raises ``RuntimeError`` when
+    ``max_iter`` rounds end short of the fixpoint, i.e. when some edge
+    still joins two different labels. State is one (id, label) row per
+    node and every step is an equi-join/groupBy on the id — AQE-skew-safe,
+    no broadcast of anything unbounded."""
     e = pairs.select(
         F.col(id_a).cast("long").alias("u"), F.col(id_b).cast("long").alias("v")
     )
-    edges = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).distinct().localCheckpoint(eager=True)
-    labels = (
+    edges = _checkpoint(
+        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .distinct()
+    )
+
+    def endpoint_labels(labels: DataFrame) -> DataFrame:
+        """edges + (lu, lv): the labels of both endpoints."""
+        return (
+            edges.join(labels.withColumnsRenamed({"id": "u", "l": "lu"}), "u")
+            .join(labels.withColumnsRenamed({"id": "v", "l": "lv"}), "v")
+        )
+
+    cur = _checkpoint(
         edges.groupBy("u")
         .agg(F.least(F.min("v"), F.first("u")).alias("l"))
         .select(F.col("u").alias("id"), "l")
-        .localCheckpoint(eager=True)
     )
-    for it in range(max_iter):
-        nbr = (
-            edges.join(labels, edges["u"] == labels["id"])
-            .groupBy(F.col("v").alias("id"))
-            .agg(F.min("l").alias("nl"))
-        )
-        # carry the pre-round label (_lo) through the step so convergence
-        # is a plain filter-count over the checkpointed result — the old
-        # formulation paid an extra equi-join of two checkpointed tables
-        # per round just to compare labels
-        stepped = (
-            labels.join(nbr, "id", "left")
-            .select(
+    try:
+        for it in range(max_iter):
+            labels = cur.select("id", "l")
+            offers = (
+                endpoint_labels(labels)
+                .select(F.explode(F.array("v", "lv")).alias("id"), "lu")
+                .groupBy("id")
+                .agg(F.min("lu").alias("nl"))
+            )
+            # carry the pre-round label (_lo) through the round so
+            # convergence is a plain filter over the checkpointed result
+            stepped = labels.join(offers, "id", "left").select(
                 "id",
                 F.col("l").alias("_lo"),
                 F.least("l", F.coalesce("nl", "l")).alias("l"),
             )
-        )
-        jump = stepped.alias("a").join(
-            stepped.select(F.col("id").alias("l"), F.col("l").alias("ll")).alias("b"),
-            "l",
-            "left",
-        )
-        new_labels = jump.select(
-            "id",
-            "_lo",
-            F.least(F.col("l"), F.coalesce(F.col("ll"), F.col("l"))).alias("l"),
-        ).localCheckpoint(eager=True)
-        labels = new_labels.select("id", "l")
-        # probe convergence every other round (and on the last): the
-        # count is a driver-blocking job, while an extra round past the
-        # fixpoint is pure recomputation of identical labels
-        if it % 2 == 1 or it == max_iter - 1:
-            if new_labels.filter(F.col("l") != F.col("_lo")).count() == 0:
+            for _ in range(2):
+                stepped = stepped.join(
+                    stepped.select(F.col("id").alias("l"), F.col("l").alias("ll")),
+                    "l",
+                    "left",
+                ).select("id", "_lo", F.least("l", F.coalesce("ll", "l")).alias("l"))
+            prev, cur = cur, _checkpoint(stepped)
+            _release(prev)  # the new labels no longer read it
+            if it % 2 == 1 and cur.filter(F.col("l") != F.col("_lo")).isEmpty():
                 break
-    return labels.select("id", F.col("l").alias("component"))
+        else:
+            if not endpoint_labels(cur.select("id", "l")).filter(
+                F.col("lu") != F.col("lv")
+            ).isEmpty():
+                raise RuntimeError(
+                    "connected_components failed to converge "
+                    f"(max_iter={max_iter} exceeded)"
+                )
+    except BaseException:
+        _release(cur)
+        raise
+    finally:
+        _release(edges)
+    return cur.select("id", F.col("l").alias("component"))
 
 
 def dedup_representatives(

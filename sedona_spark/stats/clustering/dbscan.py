@@ -1,7 +1,7 @@
 """Reference-parity DBSCAN spelling (``stats/clustering/DBSCAN.scala``,
 python wrapper ``python/sedona/spark/stats/clustering/dbscan.py:31``).
-Delegates to ``operators/dbscan.py`` (cell-grid ε-join + pointer-jumped
-label propagation)."""
+Delegates to ``operators/dbscan.py`` (cell-grid ε-join + the shared
+``pipeline.dedup.connected_components`` loop)."""
 
 from __future__ import annotations
 

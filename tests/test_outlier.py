@@ -51,3 +51,15 @@ def test_lof_coincident_points(spark):
         assert got[i] is not None
         assert got[i] == pytest.approx(1.0, abs=1e-9), i
     assert got[100] > 10.0  # far point is a strong outlier
+
+
+def test_lof_releases_its_cache(spark):
+    """The kNN frame LOF caches is released once the result exists."""
+    rng = np.random.default_rng(3)
+    df = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(rng.uniform(0, 30, (60, 2)))],
+        "point_id int, x double, y double",
+    )
+    spark.catalog.clearCache()
+    assert local_outlier_factor(df, 4, level=6).count() == 60
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

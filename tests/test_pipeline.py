@@ -2,6 +2,8 @@
 analysis, ANN — verified against in-process numpy/python oracles on the
 driver testdata `documents` / `embeddings` tables."""
 
+import itertools
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +21,8 @@ from sedona_spark.pipeline.dedup import (
     ngram_jaccard_pairs,
     simhash64,
     simhash_near_dup_pairs,
+    simhash_near_dup_pairs_portable,
+    simhash_portable,
 )
 from sedona_spark.pipeline.text import (
     doc_fingerprint,
@@ -111,6 +115,48 @@ def test_simhash_near_dup(spark, docs):
     planted = {(i, i + 500_000) for (i,) in base.limit(5).select("doc_id").collect()}
     assert planted <= got
     assert all(r.hamming <= 3 for r in pairs.collect())
+
+
+def _brute_hamming_pairs(hashes, max_hamming):
+    return {
+        (a, b, bin((ha ^ hb) & (2**64 - 1)).count("1"))
+        for (a, ha), (b, hb) in itertools.combinations(sorted(hashes), 2)
+        if bin((ha ^ hb) & (2**64 - 1)).count("1") <= max_hamming
+    }
+
+
+def test_simhash_recall_above_3(spark, docs):
+    """Above max_hamming 3, four fixed chunks break the pigeonhole bound;
+    both SimHash pair joins must still equal a brute-force scan. The seeded
+    corpus (30 documents plus 20 copies with 1-3 words dropped) holds pairs
+    within 5 bits that differ in every one of 4 chunks."""
+    base = docs.orderBy("doc_id").limit(30).select("doc_id", "text").collect()
+    rng = np.random.default_rng(8)
+    rows = [(r.doc_id, r.text) for r in base]
+    for r in base[:20]:
+        words = r.text.split()
+        k = int(rng.integers(1, 4))
+        keep = sorted(rng.choice(len(words), size=len(words) - k, replace=False))
+        rows.append((r.doc_id + 500_000, " ".join(words[j] for j in keep)))
+    corpus = spark.createDataFrame(rows, "doc_id long, text string")
+
+    for pairs_fn, hash_df, width in (
+        (simhash_near_dup_pairs,
+         corpus.select("doc_id", simhash64(F.col("text")).alias("sh")), 16),
+        (simhash_near_dup_pairs_portable, simhash_portable(corpus), 15),
+    ):
+        hashes = [(r.doc_id, r.sh) for r in hash_df.collect()]
+        want = _brute_hamming_pairs(hashes, 5)
+        got = {(r.id_a, r.id_b, r.hamming)
+               for r in pairs_fn(corpus, max_hamming=5).collect()}
+        assert got == want
+        h = dict(hashes)
+        mask = (1 << width) - 1
+        assert any(
+            all((h[a] >> (width * c)) & mask != (h[b] >> (width * c)) & mask
+                for c in range(4))
+            for a, b, _ in want
+        ), "corpus must hold a pair 4-chunk blocking misses"
 
 
 def test_ngram_jaccard(spark):

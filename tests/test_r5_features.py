@@ -343,6 +343,53 @@ def test_connected_components_long_chain_fast(spark):
     assert len(got) == 200
 
 
+def test_connected_components_shuffled_chain_fast(spark):
+    """The hook step keeps rounds logarithmic when ids are not in chain
+    order (hashed string ids are not): a 200-node chain over shuffled ids
+    converges within 6 rounds, which min-label propagation with pointer
+    jumps alone does not."""
+    from sedona_spark.pipeline.dedup import connected_components
+
+    ids = np.random.default_rng(2).permutation(200).tolist()
+    pairs = spark.createDataFrame(
+        [(ids[i], ids[i + 1]) for i in range(199)], "id_a long, id_b long"
+    )
+    got = connected_components(pairs, max_iter=6).collect()
+    assert len(got) == 200 and all(r["component"] == 0 for r in got)
+
+
+def test_connected_components_estimate_bounded(spark):
+    """Each round's checkpoint resets the optimizer's size estimate. A
+    checkpoint that keeps the estimate of the plan it cut doubles the
+    estimate's digit count every round: with one pointer jump per round
+    this chain needs 12 rounds and ends at a 232,347-digit estimate."""
+    from sedona_spark.pipeline.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(2047)], "id_a long, id_b long"
+    )
+    out = connected_components(pairs)
+    size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(str(size)) < 10**40
+    assert out.filter(F.col("component") != 0).isEmpty()
+
+
+def test_connected_components_raises_when_not_converged(spark):
+    """Out of rounds without a fixpoint is an error, not a partial
+    labelling (a 200-node chain after 2 rounds), and the failed call
+    releases its round checkpoints."""
+    from sedona_spark.pipeline.dedup import connected_components
+
+    jsc = spark.sparkContext._jsc
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(199)], "id_a long, id_b long"
+    )
+    held = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="converge"):
+        connected_components(pairs, max_iter=2)
+    assert jsc.getPersistentRDDs().size() <= held
+
+
 def test_knn_join_approx_plan_shape(spark):
     """100 TB plan contract for the approximate kNN join: one equi-join on
     the cell key (no CartesianProduct, no broadcast of the big side), no

@@ -137,3 +137,25 @@ def test_dbscan_vs_bruteforce(spark):
         assert (exp[i] == -1) == (got[i] == -1), i
         if not core[i] and exp[i] != -1:
             assert got[i] == got[exp[i]]  # attached to the min core's cluster
+
+
+def test_dbscan_string_ids(spark):
+    """String ids cluster like integer ids: 80 points eps apart on a line
+    form one cluster labelled with the min xxhash64 of its ids, and a far
+    point is noise."""
+    rows = [(i, float(i), 0.0) for i in range(80)] + [(80, 60.0, 60.0)]
+    sdf = spark.createDataFrame(
+        [(f"p{i:03d}", x, y) for i, x, y in rows], "point_id string, x double, y double"
+    )
+    idf = spark.createDataFrame(rows, "point_id int, x double, y double")
+    got_s = {r.point_id: r.cluster for r in dbscan(sdf, 1.0, 2, level=6).collect()}
+    got_i = {r.point_id: r.cluster for r in dbscan(idf, 1.0, 2, level=6).collect()}
+
+    want = sdf.filter(F.col("y") == 0).agg(F.min(F.xxhash64("point_id"))).collect()[0][0]
+    assert {got_s[f"p{i:03d}"] for i in range(80)} == {want}
+    assert got_s["p080"] == -1
+    assert {got_i[i] for i in range(80)} == {0} and got_i[80] == -1
+    # same partition as the integer-id run
+    for i in range(81):
+        for j in range(i + 1, 81):
+            assert (got_s[f"p{i:03d}"] == got_s[f"p{j:03d}"]) == (got_i[i] == got_i[j])
